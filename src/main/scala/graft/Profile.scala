@@ -28,23 +28,23 @@ object Profile {
       println(f"[profile] $name%-22s ${(System.nanoTime() - t0) / 1e9}%8.2fs  ($r)")
     }
 
-    // plan review mode: dump formatted physical plans of the key stages
-    // over a real parquet input (pushdown/pruning visible only there)
+    // plan review mode: dump formatted physical plans of the stages
+    // DedupPipeline.run executes, over a real parquet input
+    // (pushdown/pruning visible only there)
     if (sys.env.contains("SPARK_GRAFT_EXPLAIN")) {
       val dir = java.nio.file.Files.createTempDirectory("graft-explain").toString
       SyntheticPages.generate(spark, 1000).write.mode("overwrite").parquet(dir)
-      val pagesP = spark.read.parquet(dir)
-      println("=== signatures over parquet (expect ReadSchema without html) ===")
-      DedupStages.signatures(pagesP, cfg).explain("formatted")
-      val sigsP = DedupStages.signatures(pagesP, cfg)
-      println("=== candidates (expect one exchange per groupBy, partial counts) ===")
-      DedupStages.candidates(sigsP, cfg)._1.explain("formatted")
-      println("=== verified (expect two shuffled hash joins on ids) ===")
-      DedupStages.verified(DedupStages.candidates(sigsP, cfg)._1, sigsP, cfg).explain("formatted")
-      println("=== candidatesFromProbes over fused probeRows (the pipeline path) ===")
-      val pwP = DedupStages.withIds(pagesP)
-      DedupStages.candidatesFromProbes(DedupStages.probeRows(pwP, cfg),
-        DedupStages.leanSignatures(pwP, cfg), cfg)._1.explain("formatted")
+      val pw = DedupStages.withIds(spark.read.parquet(dir))
+      val sigs = DedupStages.leanSignatures(pw, cfg)
+      println("=== lean signatures over parquet (expect ReadSchema without html) ===")
+      sigs.explain("formatted")
+      println("=== candidatesFromProbes over fused probeRows ===")
+      val (cand, _) = DedupStages.candidatesFromProbes(DedupStages.probeRows(pw, cfg), sigs, cfg)
+      cand.explain("formatted")
+      println("=== verified over the lean side ===")
+      val verSide = sigs.select("doc_id", "url", "source", "lang", "content_hash")
+        .join(pw.select("doc_id", "text"), "doc_id")
+      DedupStages.verified(cand, verSide, cfg).explain("formatted")
       spark.stop(); return
     }
 
@@ -54,7 +54,11 @@ object Profile {
     // Amdahl serial term that caps measured N→4N scaling efficiency
     // (eff = lo/(4·hi) with hi = S + W/8: at 400k docs S ≈ 10 s of the
     // ~48 s 8-core steady wall). Prints per-job walls of the last run.
+    // A missing directory is first filled with SPARK_GRAFT_SCALE_N
+    // synthetic pages.
     sys.env.get("SPARK_GRAFT_PROFILE_SERIAL").foreach { dir =>
+      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir)))
+        SyntheticPages.generate(spark, n).write.parquet(dir)
       val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long, String)]()
       val taskMs = new java.util.concurrent.atomic.AtomicLong(0) // executorRunTime
       val cpuMs = new java.util.concurrent.atomic.AtomicLong(0)  // executorCpuTime

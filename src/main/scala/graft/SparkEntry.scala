@@ -750,7 +750,9 @@ object SparkEntry {
 
     "q_simhash_pairs" -> ((s, dir) => {
       val sigs = DedupStages.signatures(pages(s, dir), cfg).cache()
-      val (pairs, _) = DedupStages.simhashCandidates(sigs, cfg)
+      val (pairs, _) = DedupStages.candidatesFromProbes(
+        DedupStages.probeTable(sigs, cfg).where(col("channel") === "simhash"),
+        sigs, cfg.copy(exactChannel = false))
       pairs
         .join(sigs.select(col("doc_id").as("id_a"), col("url").as("ua")), "id_a")
         .join(sigs.select(col("doc_id").as("id_b"), col("url").as("ub")), "id_b")

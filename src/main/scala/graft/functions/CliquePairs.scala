@@ -66,6 +66,10 @@ case class SortedCliquePairs(left: Expression, right: Expression)
 }
 
 object SortedCliquePairs {
+  /** Largest array the JVM allocates; 65535 members (DedupConfig's
+    * bucketCap bound) give 2,147,385,345 pairs, under it. */
+  val MaxPairs: Long = Int.MaxValue - 8L
+
   // called from generated code (static forwarder on the companion class)
   def pairs(ids: ArrayData, tags: ArrayData): ArrayData = {
     val n = ids.numElements()
@@ -88,7 +92,10 @@ object SortedCliquePairs {
       members(i) = new GenericInternalRow(Array[Any](u(k), t(k)))
       i += 1
     }
-    val out = new Array[Any](if (n < 2) 0 else n * (n - 1) / 2)
+    val nPairs = if (n < 2) 0L else n.toLong * (n - 1) / 2
+    require(nPairs <= MaxPairs, s"sorted_clique_pairs: $n members give $nPairs pairs, " +
+      s"over the $MaxPairs-element array bound (at most 65535 members fit)")
+    val out = new Array[Any](nPairs.toInt)
     var o = 0
     i = 0
     while (i < n) {

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * per round instead of nesting k `aggregate` folds — the same lineage
   * discipline as `ConnectedComponents`.
   *
-  * Symbol granularity is UTF-16 code units (Spark's `split(w, "")`),
+  * Symbol granularity is Unicode code points (Spark's `split(w, "")`),
   * word-final symbols carry the standard `</w>` marker, and words are
   * counted case-sensitively (no locale-dependent lowercasing in the
   * contract). Tie-breaks are total: (count desc, left asc, right asc) —
@@ -49,7 +49,9 @@ object BpeOps {
     * IS code-point order). Java's String.compareTo is UTF-16 code-UNIT
     * order and DIVERGES for supplementary characters vs [U+E000,U+FFFF]
     * — the driver argmax must break ties exactly like the distributed
-    * one, so it cannot use the platform ordering. */
+    * one, so it cannot use the platform ordering. Assumes well-formed
+    * text: a lone surrogate is its own symbol here, but UTF-8 encoding
+    * replaces it with '?', so the two orders can disagree on it. */
   private def utf8Lt(x: String, y: String): Boolean = {
     var i = 0
     while (i < x.length && i < y.length) {
@@ -67,7 +69,7 @@ object BpeOps {
       .select(explode(filter(split(col(textCol), "\\s+"), t => t =!= lit(""))).as("word"))
       .groupBy("word").agg(count(lit(1)).cast("long").as("freq"))
 
-  /** Initial symbol sequence of a word: per-code-unit chars, then the
+  /** Initial symbol sequence of a word: per-code-point chars, then the
     * word-final marker (omit with `endMark = false` — the oracle-checked
     * pair-count query uses the marker-free form so its DuckDB mirror
     * stays pure substr arithmetic). */
@@ -143,7 +145,7 @@ object BpeOps {
     if (driverLimit > 0) {
       val probe = wordFreqs(docs, textCol)
         .select(toSymbols(col("word")).as("syms"), col("freq"))
-        .limit(driverLimit.toInt + 1).collect()
+        .limit(math.min(driverLimit, Int.MaxValue - 1L).toInt + 1).collect()
       if (probe.length <= driverLimit)
         return driverLearnMerges(
           probe.map(r => (r.getSeq[String](0).toArray, r.getLong(1))), k)

@@ -67,38 +67,12 @@ final case class DedupConfig(
       * length of the first side is STRICTLY > the bound (the reference
       * accepts ==bound; it runs 20). */
     authorLevMax: Option[Double] = None,
-    seed: Long = 42L,
-    /** Broadcast the multi-member-bucket `counts` side of the candidate
-      * tagging joins (candidatesFromProbes). The counts relation is one
-      * short row per multi-member bucket — a few MB at every measured
-      * corpus size (5k–1.8M docs) — but its Catalyst size ESTIMATE
-      * derives from the exploded probe scan underneath, so without a
-      * hint the planner picks SortMergeJoin and ships the full probe-row
-      * stream through two exchanges (measured at 350k docs × 8 cores:
-      * 253+275 MB shuffle writes, a redundant third probe scan for the
-      * star branch, steady wall 30.6 s vs 22.7 s hinted; 2-core wall
-      * 104 → 73 s). AQE cannot save the writes: both smj shuffle stages
-      * materialize in parallel BEFORE the runtime broadcast conversion,
-      * and the star branch's empty-relation pruning only fires when the
-      * build side is a broadcast stage.
-      *
-      * Default FALSE — the scale-safe shape: at the 10¹²-doc design
-      * point the multi-member-bucket table itself outgrows executor
-      * memory (a forced broadcast would OOM), and the shuffle joins'
-      * probe-row exchange doubles as the downstream per-bucket
-      * aggregation's partitioning. The smj shape also keeps the
-      * single-box core-scaling profile (the removed work is
-      * embarrassingly parallel, so the broadcast improves 2-core walls
-      * more than 8-core walls: measured spillfree N→4N efficiency
-      * 0.87 unhinted vs 0.73 hinted at 350k docs). On a REAL cluster at
-      * fixed size the broadcast shape is strictly better whenever counts
-      * fits (two full network shuffles of the probe stream removed —
-      * shuffles get relatively slower as clusters scale out), so deploys
-      * opt in via SPARK_GRAFT_COUNTS_BROADCAST=true or an explicit
-      * config. */
-    countsBroadcast: Boolean = DedupConfig.countsBroadcastDefault) {
+    seed: Long = 42L) {
 
   require(minhashK == bands * rowsPerBand, "minhashK must equal bands*rowsPerBand")
+  // a full clique of n members is n(n-1)/2 pairs in one array
+  // (graft.functions.SortedCliquePairs): 65535 is the largest n that fits
+  require(bucketCap <= 65535, s"bucketCap must be <= 65535, got $bucketCap")
 
   /** Stable config fingerprint for checkpoint reuse (the reference keys
     * its memoized worklists on md5 of the query params,
@@ -108,15 +82,6 @@ final case class DedupConfig(
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
-}
-
-object DedupConfig {
-  /** Deploy-level opt-in for the counts broadcast (see the field's
-    * scaladoc): false unless SPARK_GRAFT_COUNTS_BROADCAST=true, so the
-    * default config stays the scale-safe smj shape and a cluster deploy
-    * can flip the plan without code changes. */
-  val countsBroadcastDefault: Boolean =
-    sys.env.get("SPARK_GRAFT_COUNTS_BROADCAST").exists(_.equalsIgnoreCase("true"))
 }
 
 /**
@@ -278,68 +243,6 @@ object DedupStages {
         posexplode(lshBandHashes(col("minhash"), cfg.bands, cfg.rowsPerBand))
           .as(Seq("band_id", "band_hash")))
 
-  /** ONE shuffle of the bucket table into bounded per-bucket member lists
-    * + true counts (graft.functions.CappedCollect): buckets over the cap
-    * are degenerate boilerplate — their members are reported to the
-    * dropped-log, never pair-expanded. The scale-safe successor of the
-    * reference's too-many-candidates guard
-    * (classes/RecordManager.php:1402-1410). */
-  private def cappedBuckets(table: DataFrame, keyCols: Seq[String], cap: Int,
-                            tag: Column): DataFrame = {
-    val keys = keyCols.map(col)
-    // Phase 1 — counts: partial (map-side) aggregation makes this shuffle
-    // ~|distinct keys| tiny rows; at web scale almost all buckets are
-    // singletons, so filtering them here keeps the heavy member-collect
-    // off >90% of the data.
-    val multi = table.groupBy(keys: _*).agg(F.count(lit(1)).as("bucket_n"))
-      .where(col("bucket_n") >= 2)
-    // Phase 2 — bounded member collect on multi-member buckets only
-    // (left-semi join; AQE turns it into a broadcast when the hot-key set
-    // is small). CappedCollect keeps memory O(cap) even on degenerate
-    // buckets and reports their true counts.
-    val collect = org.apache.spark.sql.functions.udaf(new graft.functions.CappedCollect(cap))
-    table.join(multi.select(keys: _*), keyCols, "left_semi")
-      .groupBy(keys: _*).agg(collect(col("doc_id"), tag).as("g"))
-  }
-
-  /** All unordered member pairs of a (≤ cap) struct array, expanded
-    * in-task (no self-join): element i paired with every later element. */
-  private def pairExpand(m: Column): Column =
-    flatten(transform(m, (x, i) =>
-      transform(slice(m, i + lit(2), size(m)), y => struct(x.as("a"), y.as("b")))))
-
-  /** Star expansion: min member paired with every other — O(|m|) pairs.
-    * Used to SALVAGE over-cap buckets: the retained cap-sample still
-    * yields candidates (the reference caps its candidate list but still
-    * matches within it, classes/RecordManager.php:1402-1410); the verify
-    * stage discards boilerplate collisions and connected components
-    * restores full clusters through the star center. */
-  private def starExpand(m: Column): Column =
-    transform(slice(m, lit(2), greatest(size(m) - 1, lit(0))), y =>
-      struct(element_at(m, 1).as("a"), y.as("b")))
-
-  /** Pair expansion dispatch: full clique under the cap, star salvage
-    * over it. `bn` = the bucket's TRUE member count. */
-  private def expandMembers(bn: Column, m: Column, cap: Int): Column =
-    when(bn <= cap, pairExpand(m)).otherwise(starExpand(m))
-
-  /** Channel 1 — MinHash LSH banding: bucket by (band_id, band_hash),
-    * expand pairs within kept buckets. */
-  def lshCandidates(sigs: DataFrame, cfg: DedupConfig): (DataFrame, DataFrame) = {
-    val buckets = cappedBuckets(lshBands(sigs, cfg),
-      Seq("band_id", "band_hash"), cfg.bucketCap, lit(0L))
-    val dropped = buckets.where(col("g.count") > cfg.bucketCap)
-      .select(col("band_id"), col("band_hash"), col("g.count").as("bucket_n"))
-    val pairs = buckets
-      .where(col("g.count") >= 2)
-      .select(col("g.count").as("bn"), sort_array(col("g.ids")).as("m"))
-      .select(explode(expandMembers(col("bn"), col("m"), cfg.bucketCap)).as("p"))
-      .select(col("p.a").as("id_a"), col("p.b").as("id_b"),
-        lit("minhash_lsh").as("channel"))
-      .distinct()
-    (pairs, dropped)
-  }
-
   /** SimHash probe table: 4 × 16-bit chunks. Any pair within Hamming
     * distance ≤ 3 of each other agrees exactly on ≥ 1 chunk (pigeonhole),
     * so the chunk equi-join is a complete candidate generator for d ≤ 3. */
@@ -352,54 +255,7 @@ object DedupStages {
       .select(col("doc_id"), col("simhash"), col("p.probe_id"), col("p.probe_val"))
   }
 
-  /** Channel 2 — SimHash Hamming-ball probing: bucket by 16-bit chunk,
-    * expand pairs within kept buckets (the simhash value rides along as
-    * the collector tag, so no join back to the signature table), then the
-    * exact Hamming residual via bit_count(xor). */
-  def simhashCandidates(sigs: DataFrame, cfg: DedupConfig): (DataFrame, DataFrame) = {
-    val buckets = cappedBuckets(simhashProbes(sigs),
-      Seq("probe_id", "probe_val"), cfg.bucketCap, col("simhash"))
-    val dropped = buckets.where(col("g.count") > cfg.bucketCap)
-      .select(col("probe_id"), col("probe_val"), col("g.count").as("bucket_n"))
-    val pairs = buckets
-      .where(col("g.count") >= 2)
-      .select(col("g.count").as("bn"), array_sort(zip_with(col("g.ids"), col("g.tags"),
-        (u, t) => struct(u.as("u"), t.as("t")))).as("m"))
-      .select(col("bn"), explode(expandMembers(col("bn"), col("m"), cfg.bucketCap)).as("p"))
-      // Hamming residual applies to clique pairs only; over-cap STAR
-      // salvage pairs skip it (precision delegated to verify) — the same
-      // semantics as the fused candidatesFromProbes path
-      .where(col("bn") > cfg.bucketCap ||
-        bit_count(col("p.a.t").bitwiseXOR(col("p.b.t"))) <= cfg.simhashMaxHamming)
-      .select(col("p.a.u").as("id_a"), col("p.b.u").as("id_b"),
-        lit("simhash").as("channel"))
-      .distinct()
-    (pairs, dropped)
-  }
-
-  /** Channel 3 — substring duplication (north rule's suffix-array pass,
-    * re-based on winnowed anchor fingerprints — see
-    * graft.functions.WinnowAnchors): docs sharing an exact token run of
-    * >= substrWindow + winnowWindow - 1 tokens share an anchor, so the
-    * anchor bucket join is a complete candidate generator for verbatim
-    * containment (FIXTURES.md "substr" class). */
-  def substringCandidates(sigs: DataFrame, cfg: DedupConfig): (DataFrame, DataFrame) = {
-    val anchors = sigs.where(size(col("anchors")) > 0)
-      .select(col("doc_id"), explode(col("anchors")).as("anchor"))
-    val buckets = cappedBuckets(anchors, Seq("anchor"), cfg.bucketCap, lit(0L))
-    val dropped = buckets.where(col("g.count") > cfg.bucketCap)
-      .select(col("anchor"), col("g.count").as("bucket_n"))
-    val pairs = buckets
-      .where(col("g.count") >= 2)
-      .select(col("g.count").as("bn"), sort_array(col("g.ids")).as("m"))
-      .select(explode(expandMembers(col("bn"), col("m"), cfg.bucketCap)).as("p"))
-      .select(col("p.a").as("id_a"), col("p.b").as("id_b"),
-        lit("substring").as("channel"))
-      .distinct()
-    (pairs, dropped)
-  }
-
-  /** Channel 4 — exact content hash. Within an identical-text group the
+  /** Exact content-hash channel. Within an identical-text group the
     * component is fully determined, so emit a STAR (min-url rep → member)
     * instead of all O(m²) pairs — same connected components, linear size.
     * (Analog of the reference's shared-ISBN immediate match,
@@ -438,14 +294,13 @@ object DedupStages {
     bands.unionByName(probes).unionByName(anchors)
   }
 
-  /** All channels unioned with provenance (channels collected per pair —
-    * the reference records which key family produced a match only in logs;
-    * we keep it queryable). Returns (pairs, droppedBucketsLog). */
-  def candidates(sigs: DataFrame, cfg: DedupConfig): (DataFrame, DataFrame) =
-    candidatesFromProbes(probeTable(sigs, cfg), sigs, cfg)
-
-  /** Same, over an explicit probe table — the incremental pass restricts
-    * the probes to dirty-touching buckets (graft.pipeline.IncrementalDedup). */
+  /** Stage 2 — candidate pairs from a (channel, bucket_key, doc_id, tag)
+    * probe relation (`probeRows`, or `probeTable` over full signatures;
+    * the incremental pass restricts it to dirty-touching buckets,
+    * graft.pipeline.IncrementalDedup), unioned with the exact channel and
+    * tagged with the channels that produced each pair (the reference
+    * records which key family matched only in logs; we keep it
+    * queryable). Returns (pairs, droppedBucketsLog). */
   def candidatesFromProbes(probes: DataFrame, sigs: DataFrame,
                            cfg: DedupConfig): (DataFrame, DataFrame) = {
     // One counting pass (map-side partial agg → tiny shuffle) classifies
@@ -467,36 +322,22 @@ object DedupStages {
       .select(col("channel"), col("bucket_key"), col("bucket_n"))
 
     // Attach (bucket_n, center) to EVERY multi-member probe row with ONE
-    // inner join, broadcast-hinted when cfg.countsBroadcast is set (a
-    // deploy opt-in — see the DedupConfig scaladoc for the full regime
-    // analysis and measurements): hinted, the raw probe rows are never
-    // shuffled or sorted — the fused probe scan streams through the join
-    // map-side (350k docs × 8 cores: 30.6 → 22.7 s steady wall, 216 →
-    // 150 core-s, two ~250 MB probe shuffles removed). The hint is what
-    // makes that shape possible: the checkpointed leaf's size ESTIMATE
-    // comes from the exploded probe scan underneath, so the unhinted
-    // planner picks SortMergeJoin and BOTH smj shuffle stages materialize
-    // (full probe-row exchanges) before AQE's runtime broadcast
-    // conversion can fire. Unhinted — the default — the probe-row
-    // exchange is not wasted: it doubles as the per-bucket aggregation's
-    // partitioning (no second exchange before CappedCollect), the shape
-    // holds at bucket cardinalities past broadcast limits, and the
-    // single-box N→4N scaling profile stays flat (0.87 vs 0.73 measured;
-    // the broadcast removes embarrassingly parallel work, which helps
-    // small-core walls more than large-core walls).
+    // inner join. The join carries no hint: the checkpointed leaf's size
+    // estimate comes from the exploded probe scan, so the static plan is a
+    // shuffle join, and AQE converts it to a broadcast at run time when
+    // the materialized counts are small. The probe-row exchange of the
+    // shuffle shape doubles as the per-bucket aggregation's partitioning
+    // (no second exchange before CappedCollect), and the shape holds at
+    // bucket cardinalities past broadcast limits.
     //
     // Per-branch build-side filters (cold = under-cap, hot = over-cap) so
     // each branch's bucket_n predicate lives BELOW its join: when a pass
     // has no over-cap buckets at all — the common case — AQE's empty-
-    // relation propagation prunes the star branch's ENTIRE join including
-    // its probe scan (a filter above a shared join would defeat that;
-    // the pruning also needs the broadcast build side — parallel smj
-    // stage materialization submits the probe scan regardless).
+    // relation propagation can prune the star branch's join (a filter
+    // above a shared join would defeat that).
     val cold = counts.where(col("bucket_n") <= cfg.bucketCap)
     val hot = counts.where(col("bucket_n") > cfg.bucketCap)
-    def maybeBcast(df: DataFrame): DataFrame =
-      if (cfg.countsBroadcast) broadcast(df) else df
-    val tagged = probes.join(maybeBcast(cold), Seq("channel", "bucket_key"))
+    val tagged = probes.join(cold, Seq("channel", "bucket_key"))
 
     // normal buckets: bounded member collect + in-task clique expansion
     // (partial ObjectHashAggregate combines map-side, so only capped
@@ -535,7 +376,7 @@ object DedupStages {
     // oversized stream partitions are split, build rows duplicated)
     // covers the degenerate-bucket case, and under broadcast — every
     // measured regime — the salt was pure plan-size cost.
-    val starPairs = probes.join(maybeBcast(hot), Seq("channel", "bucket_key"))
+    val starPairs = probes.join(hot, Seq("channel", "bucket_key"))
       .where(col("doc_id") =!= col("center"))
       .select(col("center").as("id_a"), col("doc_id").as("id_b"), col("channel"))
 

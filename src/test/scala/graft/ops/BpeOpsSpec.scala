@@ -76,6 +76,14 @@ class BpeOpsSpec extends AnyFunSuite {
     assert(dist == BpeOps.learnMerges(docs, 10))
   }
 
+  test("driver limits past Int range keep the driver path (no empty or negative limit)") {
+    val docs = corpus.toDF("text")
+    val expect = BpeOps.learnMerges(docs, 10)
+    assert(expect.nonEmpty)
+    assert(BpeOps.learnMerges(docs, 10, driverLimit = Long.MaxValue) == expect)
+    assert(BpeOps.learnMerges(docs, 10, driverLimit = Int.MaxValue.toLong) == expect)
+  }
+
   test("driver argmax breaks ties in UTF-8 order like the distributed orderBy") {
     // U+FFFD vs U+1D11E (a supplementary char): UTF-8/code-point order
     // says U+FFFD < U+1D11E, Java's UTF-16 code-unit order says the

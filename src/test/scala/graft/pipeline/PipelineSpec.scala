@@ -224,12 +224,9 @@ class PipelineSpec extends AnyFunSuite {
     // guarding; under broadcast it was pure plan cost) — the surviving
     // contract is that a forced shuffle fallback changes NO pairs and the
     // star join stays an equi-join AQE skew handling can split (no
-    // cartesian/nested-loop degeneration). countsBroadcast = false is the
-    // 100 TB escape hatch (the explicit hint would override the disabled
-    // thresholds, so the flag is what actually exercises this regime).
-    val capped = DedupConfig(bucketCap = 10, exactChannel = false,
-      countsBroadcast = false)
-    val normal = pipelinePairs(capped.copy(countsBroadcast = true))
+    // cartesian/nested-loop degeneration).
+    val capped = DedupConfig(bucketCap = 10, exactChannel = false)
+    val normal = pipelinePairs(capped)
     val confs = Seq("spark.sql.autoBroadcastJoinThreshold",
       "spark.sql.adaptive.autoBroadcastJoinThreshold")
     val saved = confs.map(k => k -> spark.conf.getOption(k))
@@ -247,11 +244,18 @@ class PipelineSpec extends AnyFunSuite {
         !physical.contains("BroadcastNestedLoopJoin"),
         s"star salvage must stay an equi-join under shuffle fallback:\n$physical")
       assert(!physical.contains("BroadcastHashJoin"),
-        "countsBroadcast=false + disabled thresholds must actually reach " +
-          s"the shuffle-join regime (the regime under test):\n$physical")
+        "disabled thresholds must actually reach the shuffle-join regime " +
+          s"(the regime under test):\n$physical")
     } finally saved.foreach { case (k, v) =>
       v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
+  }
+
+  test("bucketCap past the clique-pair array bound is rejected") {
+    // a full clique of n members is n(n-1)/2 pairs in one array: 65535
+    // members is the largest n whose clique still fits
+    assert(DedupConfig(bucketCap = 65535).bucketCap == 65535)
+    intercept[IllegalArgumentException](DedupConfig(bucketCap = 65536))
   }
 
   test("doc_ids are recompute-stable: same url -> same id under any partition layout") {

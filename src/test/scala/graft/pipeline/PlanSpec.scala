@@ -28,37 +28,12 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("candidate generation plans no cartesian product or nested loop join") {
-    val sigs = DedupStages.signatures(parquetPages, cfg)
-    val (pairs, _) = DedupStages.candidates(sigs, cfg)
+    val pw = DedupStages.withIds(parquetPages)
+    val (pairs, _) = DedupStages.candidatesFromProbes(
+      DedupStages.probeRows(pw, cfg), DedupStages.leanSignatures(pw, cfg), cfg)
     val plan = pairs.queryExecution.executedPlan.toString()
     assert(!plan.contains("CartesianProduct"), "cartesian product in candidate plan")
     assert(!plan.contains("BroadcastNestedLoopJoin"), "nested loop join in candidate plan")
-  }
-
-  test("countsBroadcast=true plans the tagging joins as static broadcasts") {
-    // The countsBroadcast hint (deploy opt-in, default false — see the
-    // DedupConfig scaladoc for the regime analysis) is load-bearing when
-    // enabled: the checkpointed counts leaf's size estimate derives from
-    // the exploded probe scan, so the unhinted planner picks
-    // SortMergeJoin and ships the raw probe-row stream through two full
-    // exchanges (measured at 350k docs: two ~250 MB shuffle writes and a
-    // redundant third probe scan; AQE's runtime broadcast conversion
-    // fires only AFTER both smj shuffle stages have materialized, so it
-    // cannot save the writes). This asserts the flag puts the broadcast
-    // in the STATIC plan: the tagging joins on (channel, bucket_key)
-    // must not be shuffle joins. The CappedCollect partial-buffer
-    // exchange also keys on (channel, bucket_key) and is legitimate,
-    // hence the join-node-level match.
-    val bcfg = cfg.copy(countsBroadcast = true)
-    val pw = DedupStages.withIds(parquetPages)
-    val (pairs, _) = DedupStages.candidatesFromProbes(
-      DedupStages.probeRows(pw, bcfg), DedupStages.leanSignatures(pw, bcfg), bcfg)
-    val plan = pairs.queryExecution.executedPlan.toString()
-    assert(!plan.contains("SortMergeJoin [channel") &&
-      !plan.contains("ShuffledHashJoin [channel"),
-      s"counts tagging joins must be broadcast, not shuffle joins:\n$plan")
-    assert(plan.contains("BroadcastHashJoin"),
-      s"expected a BroadcastHashJoin for the counts tagging join:\n$plan")
   }
 
   test("verify stage shingles only pair participants: semi-join sits below the shingle projection") {
