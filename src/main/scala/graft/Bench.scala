@@ -391,6 +391,14 @@ object Bench {
     else None
   }
 
+  /** Additive scaling keys for a host with fewer cores than the hi leg
+    * pins: `taskset -c 0-(hi-1)` silently clamps to the cores that exist,
+    * so the hi leg runs oversubscribed and the ratio is not a scaling
+    * measurement. Empty when the host has the cores. */
+  private[graft] def coreGuardJson(hi: Int, hostCores: Int): String =
+    if (hi > hostCores) s""","host_cores":$hostCores,"insufficient_cores":true"""
+    else ""
+
   /** Mutable per-protocol scaling state (filled rep by rep). */
   private[graft] final class ProtoState(val label: String, val scaleN: Long) {
     val loRuns = scala.collection.mutable.ListBuffer.empty[Double]
@@ -646,6 +654,7 @@ object Bench {
     // kill still banks the completed evidence.
     val lo = sys.env.getOrElse("SPARK_GRAFT_SCALE_LO", "2").toInt
     val hi = lo * 4
+    val coreGuard = coreGuardJson(hi, Runtime.getRuntime.availableProcessors())
     val protocols = Seq(
       new ProtoState("spillfree",
         // 350k: the largest corpus whose lo leg reliably completes TWO
@@ -684,7 +693,7 @@ object Bench {
         ""","efficiency_note":"super-unity: lo-leg walls contention-inflated (see host_load); read as >= 0.8 met, magnitude unreliable""""
       else ""
       scalingJson =
-        s"""{"cores_n":$lo,"cores_4n":$hi,$effKeys,"efficiency_n_to_4n":${f"$headEff%.3f"},"efficiency_steady":$headSteady$headNote,"protocols":{${done.map(_.json).mkString(",")}},"confound":"tuned (partitions=cores, 1.8M docs) puts the 2-core leg in a spill regime the 8-core leg avoids, inflating its ratio; spillfree is the clean single-box estimate (BENCH.md sensitivity table)"}"""
+        s"""{"cores_n":$lo,"cores_4n":$hi$coreGuard,$effKeys,"efficiency_n_to_4n":${f"$headEff%.3f"},"efficiency_steady":$headSteady$headNote,"protocols":{${done.map(_.json).mkString(",")}},"confound":"tuned (partitions=cores, 1.8M docs) puts the 2-core leg in a spill regime the 8-core leg avoids, inflating its ratio; spillfree is the clean single-box estimate (BENCH.md sensitivity table)"}"""
     }
     def emitScaling(): Unit = { buildScalingJson(); emit() }
 

@@ -24,19 +24,23 @@ import org.apache.spark.unsafe.types.UTF8String
  * projection (sa + anchors). Common-subexpression elimination cannot
  * rescue lambda-bearing trees (`transform`). The probe scan is the bulk
  * of all pipeline compute, so the duplication was the dominant
- * scaling-leg cost. This expression's per-element arithmetic is
- * BIT-IDENTICAL to the builtin chain it replaces:
+ * scaling-leg cost.
+ *
+ * Shingles, MinHash, band mix, SimHash and winnowing are calls to the
+ * kernels on the companions of ShingleHashes / MinHashSignature /
+ * LshBandHashes / SimHash64 / WinnowAnchors — the code those primitive
+ * expressions run — so their arithmetic exists once, pinned by
+ * SignatureSpec's golden folds. MinHash runs over the raw shingle stream:
+ * minima are duplicate-insensitive, so `array_distinct` was semantically
+ * dead there. This expression's own work, which ProbeRowsSpec pins
+ * against the builtin chain:
  *
  *  - token split: single-space byte walk ≡ `split(text, " ", -1)` (the
  *    0x20 byte never occurs inside a UTF-8 multibyte sequence; empties
  *    kept, `""` → one empty token — same as the regex split)
  *  - token hash: XXH64 over the token's UTF-8 bytes, seed 42
  *    ≡ `xxhash64(token)`
- *  - shingles / MinHash / band mix / SimHash / winnowing: the same
- *    splitmix chains as ShingleHashes / MinHashSignature / LshBandHashes
- *    / SimHash64 / WinnowAnchors (MinHash runs over the raw shingle
- *    stream — minima are duplicate-insensitive, so `array_distinct` was
- *    semantically dead there)
+ *  - anchor distinct: first occurrence kept ≡ `array_distinct`
  *  - bucket keys: the same multi-arg xxhash64 fold (seed 42,
  *    int/int/long operand typing) as `probeTable`, so the persisted
  *    index and the fused scan stay key-compatible bit-for-bit
@@ -88,29 +92,6 @@ object ProbeRowsFor {
   private val ChSimhash = UTF8String.fromString("simhash")
   private val ChSubstring = UTF8String.fromString("substring")
 
-  /** Rolling shingle hashes — exactly ShingleHashes.nullSafeEval. */
-  private def shingles(th: Array[Long], n: Int): Array[Long] = {
-    val len = th.length
-    if (len == 0) return Array.emptyLongArray
-    val width = math.min(n, len)
-    val m = len - width + 1
-    val out = new Array[Long](m)
-    var i = 0
-    while (i < m) {
-      var h = 0x2545F4914F6CDD1DL
-      var j = 0
-      while (j < width) {
-        var z = th(i + j) + 0x9E3779B97F4A7C15L * (j + 1)
-        z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-        h = (h ^ z) * 0x94D049BB133111EBL
-        j += 1
-      }
-      out(i) = h ^ (h >>> 31)
-      i += 1
-    }
-    out
-  }
-
   // called from generated code (static forwarder on the companion class)
   def evalRows(text: UTF8String, shingleN: Int, substrN: Int, winnowW: Int,
                coefA: Array[Long], coefB: Array[Long], bands: Int,
@@ -140,56 +121,15 @@ object ProbeRowsFor {
       i += 1
     }
 
-    // ---- shingle stream, MinHash minima, SimHash votes in one pass
-    val sa = shingles(th, shingleN)
-    val k = coefA.length
-    val sig = new Array[Long](k)
-    java.util.Arrays.fill(sig, Long.MaxValue)
-    val votes = new Array[Int](64)
-    i = 0
-    while (i < sa.length) {
-      val h = sa(i)
-      var j = 0
-      while (j < k) {
-        val v = coefA(j) * h + coefB(j)
-        if (v < sig(j)) sig(j) = v
-        j += 1
-      }
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-        b += 1
-      }
-      i += 1
-    }
-    var sim = 0L
-    i = 0
-    while (i < 64) {
-      if (votes(i) > 0) sim |= (1L << i)
-      i += 1
-    }
+    // ---- signatures: the primitive expressions' kernels
+    val sa = ShingleHashes.hashes(th, shingleN)
+    val sim = SimHash64.simhash(sa)
+    val bandHashes = LshBandHashes.bandHashes(
+      MinHashSignature.minima(sa, coefA, coefB), bands, rowsPerBand)
+    val anchorsAll = WinnowAnchors.anchors(ShingleHashes.hashes(th, substrN), winnowW)
 
-    // ---- winnowed anchors over the substrN-shingle stream, first-
-    // occurrence distinct (≡ array_distinct(winnow_anchors(...)))
-    val s24 = shingles(th, substrN)
-    val anchorsAll = new Array[Long](s24.length)
-    var nAnchor = 0
-    if (s24.length > 0) {
-      var last = -1
-      val lim = math.max(1, s24.length - winnowW + 1)
-      var p = 0
-      while (p < lim) {
-        var m = p
-        var j = p + 1
-        val end = math.min(p + winnowW, s24.length)
-        while (j < end) {
-          if (s24(j) <= s24(m)) m = j
-          j += 1
-        }
-        if (m != last) { anchorsAll(nAnchor) = s24(m); nAnchor += 1; last = m }
-        p += 1
-      }
-    }
+    // ---- first-occurrence anchor distinct (≡ array_distinct(...))
+    val nAnchor = anchorsAll.length
     val seen = new java.util.HashSet[java.lang.Long](math.max(4, nAnchor * 2))
     val anchors = new Array[Long](nAnchor)
     var nDistinct = 0
@@ -207,16 +147,7 @@ object ProbeRowsFor {
     val seed0 = XXH64.hashInt(0, 42L)
     var b = 0
     while (b < bands) {
-      var h = 0x9E3779B97F4A7C15L * (b + 1)
-      var r = 0
-      while (r < rowsPerBand) {
-        var z = sig(b * rowsPerBand + r) + 0x9E3779B97F4A7C15L * (r + 1)
-        z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-        h = (h ^ z) * 0x94D049BB133111EBL
-        r += 1
-      }
-      val bandHash = h ^ (h >>> 31)
-      val key = XXH64.hashLong(bandHash, XXH64.hashInt(b, seed0))
+      val key = XXH64.hashLong(bandHashes(b), XXH64.hashInt(b, seed0))
       out(o) = InternalRow(ChMinhash, key, 0L)
       o += 1
       b += 1

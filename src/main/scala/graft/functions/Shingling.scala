@@ -30,10 +30,24 @@ case class ShingleHashes(child: Expression, n: Int)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "shingle_hashes"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val len = arr.numElements()
-    if (len == 0) return UnsafeArrayData.fromPrimitiveArray(Array.empty[Long])
+  override def nullSafeEval(input: Any): Any = UnsafeArrayData.fromPrimitiveArray(
+    ShingleHashes.hashes(input.asInstanceOf[ArrayData].toLongArray(), n))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = ${classOf[UnsafeArrayData].getName}.fromPrimitiveArray(" +
+        s"graft.functions.ShingleHashes.hashes($c.toLongArray(), $n));")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object ShingleHashes {
+  /** Rolling n-gram hashes over the token hashes `th`. Called from
+    * generated code (static forwarder on the companion class). */
+  def hashes(th: Array[Long], n: Int): Array[Long] = {
+    val len = th.length
+    if (len == 0) return Array.emptyLongArray
     val width = math.min(n, len)
     val m = len - width + 1
     val out = new Array[Long](m)
@@ -42,7 +56,7 @@ case class ShingleHashes(child: Expression, n: Int)
       var h = 0x2545F4914F6CDD1DL
       var j = 0
       while (j < width) {
-        var z = arr.getLong(i + j) + 0x9E3779B97F4A7C15L * (j + 1)
+        var z = th(i + j) + 0x9E3779B97F4A7C15L * (j + 1)
         z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
         h = (h ^ z) * 0x94D049BB133111EBL
         j += 1
@@ -50,40 +64,8 @@ case class ShingleHashes(child: Expression, n: Int)
       out(i) = h ^ (h >>> 31)
       i += 1
     }
-    UnsafeArrayData.fromPrimitiveArray(out)
+    out
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, c => {
-      val len = ctx.freshName("len")
-      val width = ctx.freshName("width")
-      val m = ctx.freshName("m")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val h = ctx.freshName("h")
-      val z = ctx.freshName("z")
-      s"""
-         |int $len = $c.numElements();
-         |int $width = $len < $n ? $len : $n;
-         |int $m = $len == 0 ? 0 : $len - $width + 1;
-         |long[] $out = new long[$m];
-         |for (int $i = 0; $i < $m; $i++) {
-         |  long $h = 0x2545F4914F6CDD1DL;
-         |  for (int $j = 0; $j < $width; $j++) {
-         |    long $z = $c.getLong($i + $j) + 0x9E3779B97F4A7C15L * ($j + 1);
-         |    $z = ($z ^ ($z >>> 30)) * 0xBF58476D1CE4E5B9L;
-         |    $h = ($h ^ $z) * 0x94D049BB133111EBL;
-         |  }
-         |  $out[$i] = $h ^ ($h >>> 31);
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Column helpers for the tokenize → hash → shingle chain (all codegen'd

@@ -49,7 +49,8 @@ object SignatureCoefficients {
  *
  * A native Expression with codegen rather than a Scala UDF: no
  * serialization of the lambda, no Row boxing of the input array — the
- * generated Java reads the UnsafeArrayData longs directly.
+ * generated Java hands the input's longs to `MinHashSignature.minima`,
+ * the helper interpreted eval and the fused ProbeRowsFor also call.
  */
 case class MinHashSignature(child: Expression, k: Int, seed: Long)
     extends UnaryExpression {
@@ -60,14 +61,32 @@ case class MinHashSignature(child: Expression, k: Int, seed: Long)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "minhash_signature"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
+  override def nullSafeEval(input: Any): Any = UnsafeArrayData.fromPrimitiveArray(
+    MinHashSignature.minima(input.asInstanceOf[ArrayData].toLongArray(), coefA, coefB))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val aRef = ctx.addReferenceObj("minhashA", coefA, "long[]")
+    val bRef = ctx.addReferenceObj("minhashB", coefB, "long[]")
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = ${classOf[UnsafeArrayData].getName}.fromPrimitiveArray(" +
+        s"graft.functions.MinHashSignature.minima($c.toLongArray(), $aRef, $bRef));")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object MinHashSignature {
+  /** The k minima of h(x) = a(j)*x + b(j) over xs (Long.MaxValue when xs
+    * is empty). Called from generated code (static forwarder on the
+    * companion class). */
+  def minima(xs: Array[Long], coefA: Array[Long], coefB: Array[Long]): Array[Long] = {
+    val k = coefA.length
     val sig = new Array[Long](k)
     java.util.Arrays.fill(sig, Long.MaxValue)
     var i = 0
-    while (i < n) {
-      val h = arr.getLong(i)
+    while (i < xs.length) {
+      val h = xs(i)
       var j = 0
       while (j < k) {
         val v = coefA(j) * h + coefB(j)
@@ -76,37 +95,8 @@ case class MinHashSignature(child: Expression, k: Int, seed: Long)
       }
       i += 1
     }
-    UnsafeArrayData.fromPrimitiveArray(sig)
+    sig
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("minhashA", coefA, "long[]")
-    val bRef = ctx.addReferenceObj("minhashB", coefB, "long[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val sig = ctx.freshName("sig")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val h = ctx.freshName("h")
-      val v = ctx.freshName("v")
-      s"""
-         |long[] $sig = new long[$k];
-         |java.util.Arrays.fill($sig, Long.MAX_VALUE);
-         |int $n = $c.numElements();
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $h = $c.getLong($i);
-         |  for (int $j = 0; $j < $k; $j++) {
-         |    long $v = $aRef[$j] * $h + $bRef[$j];
-         |    if ($v < $sig[$j]) $sig[$j] = $v;
-         |  }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($sig);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /**
@@ -124,15 +114,29 @@ case class LshBandHashes(child: Expression, bands: Int, rowsPerBand: Int)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "lsh_band_hashes"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any = UnsafeArrayData.fromPrimitiveArray(
+    LshBandHashes.bandHashes(input.asInstanceOf[ArrayData].toLongArray(), bands, rowsPerBand))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = ${classOf[UnsafeArrayData].getName}.fromPrimitiveArray(" +
+        s"graft.functions.LshBandHashes.bandHashes($c.toLongArray(), $bands, $rowsPerBand));")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object LshBandHashes {
+  /** One hash per band of `rowsPerBand` consecutive signature values.
+    * Called from generated code (static forwarder on the companion class). */
+  def bandHashes(sig: Array[Long], bands: Int, rowsPerBand: Int): Array[Long] = {
     val out = new Array[Long](bands)
     var b = 0
     while (b < bands) {
       var h = 0x9E3779B97F4A7C15L * (b + 1)
       var r = 0
       while (r < rowsPerBand) {
-        var z = arr.getLong(b * rowsPerBand + r) + 0x9E3779B97F4A7C15L * (r + 1)
+        var z = sig(b * rowsPerBand + r) + 0x9E3779B97F4A7C15L * (r + 1)
         z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
         h = (h ^ z) * 0x94D049BB133111EBL
         r += 1
@@ -140,34 +144,8 @@ case class LshBandHashes(child: Expression, bands: Int, rowsPerBand: Int)
       out(b) = h ^ (h >>> 31)
       b += 1
     }
-    UnsafeArrayData.fromPrimitiveArray(out)
+    out
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, c => {
-      val out = ctx.freshName("out")
-      val b = ctx.freshName("b")
-      val r = ctx.freshName("r")
-      val h = ctx.freshName("h")
-      val z = ctx.freshName("z")
-      s"""
-         |long[] $out = new long[$bands];
-         |for (int $b = 0; $b < $bands; $b++) {
-         |  long $h = 0x9E3779B97F4A7C15L * ($b + 1);
-         |  for (int $r = 0; $r < $rowsPerBand; $r++) {
-         |    long $z = $c.getLong($b * $rowsPerBand + $r) + 0x9E3779B97F4A7C15L * ($r + 1);
-         |    $z = ($z ^ ($z >>> 30)) * 0xBF58476D1CE4E5B9L;
-         |    $h = ($h ^ $z) * 0x94D049BB133111EBL;
-         |  }
-         |  $out[$b] = $h ^ ($h >>> 31);
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /**
@@ -185,13 +163,25 @@ case class SimHash64(child: Expression)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "simhash64"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
+  override def nullSafeEval(input: Any): Any =
+    java.lang.Long.valueOf(SimHash64.simhash(input.asInstanceOf[ArrayData].toLongArray()))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.SimHash64.simhash($c.toLongArray());")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object SimHash64 {
+  /** Bit b is set iff more of xs have bit b set than clear. Called from
+    * generated code (static forwarder on the companion class). */
+  def simhash(xs: Array[Long]): Long = {
     val acc = new Array[Int](64)
     var i = 0
-    while (i < n) {
-      val h = arr.getLong(i)
+    while (i < xs.length) {
+      val h = xs(i)
       var b = 0
       while (b < 64) {
         if (((h >>> b) & 1L) == 1L) acc(b) += 1 else acc(b) -= 1
@@ -205,37 +195,8 @@ case class SimHash64(child: Expression)
       if (acc(b) > 0) out |= (1L << b)
       b += 1
     }
-    java.lang.Long.valueOf(out)
+    out
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, c => {
-      val acc = ctx.freshName("acc")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      val h = ctx.freshName("h")
-      val out = ctx.freshName("out")
-      s"""
-         |int[] $acc = new int[64];
-         |int $n = $c.numElements();
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $h = $c.getLong($i);
-         |  for (int $b = 0; $b < 64; $b++) {
-         |    $acc[$b] += (($h >>> $b) & 1L) == 1L ? 1 : -1;
-         |  }
-         |}
-         |long $out = 0L;
-         |for (int $b = 0; $b < 64; $b++) {
-         |  if ($acc[$b] > 0) $out |= (1L << $b);
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Column-level entry points (the graft analog of functions._). */

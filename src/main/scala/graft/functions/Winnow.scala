@@ -31,11 +31,26 @@ case class WinnowAnchors(child: Expression, w: Int)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "winnow_anchors"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    if (n == 0) return UnsafeArrayData.fromPrimitiveArray(Array.empty[Long])
-    val out = new scala.collection.mutable.ArrayBuffer[Long]()
+  override def nullSafeEval(input: Any): Any = UnsafeArrayData.fromPrimitiveArray(
+    WinnowAnchors.anchors(input.asInstanceOf[ArrayData].toLongArray(), w))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = ${classOf[UnsafeArrayData].getName}.fromPrimitiveArray(" +
+        s"graft.functions.WinnowAnchors.anchors($c.toLongArray(), $w));")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object WinnowAnchors {
+  /** The winnowed anchors of xs in window order (not distinct). Called
+    * from generated code (static forwarder on the companion class). */
+  def anchors(xs: Array[Long], w: Int): Array[Long] = {
+    val n = xs.length
+    if (n == 0) return Array.emptyLongArray
+    val out = new Array[Long](n)
+    var cnt = 0
     var last = -1 // index of previously selected anchor
     var i = 0
     val lim = math.max(1, n - w + 1)
@@ -45,49 +60,14 @@ case class WinnowAnchors(child: Expression, w: Int)
       var j = i + 1
       val end = math.min(i + w, n)
       while (j < end) {
-        if (arr.getLong(j) <= arr.getLong(m)) m = j
+        if (xs(j) <= xs(m)) m = j
         j += 1
       }
-      if (m != last) { out += arr.getLong(m); last = m }
+      if (m != last) { out(cnt) = xs(m); cnt += 1; last = m }
       i += 1
     }
-    UnsafeArrayData.fromPrimitiveArray(out.toArray)
+    java.util.Arrays.copyOf(out, cnt)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val cnt = ctx.freshName("cnt")
-      val last = ctx.freshName("last")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val m = ctx.freshName("m")
-      val end = ctx.freshName("end")
-      val lim = ctx.freshName("lim")
-      val res = ctx.freshName("res")
-      s"""
-         |int $n = $c.numElements();
-         |long[] $out = new long[$n == 0 ? 0 : $n];
-         |int $cnt = 0;
-         |int $last = -1;
-         |int $lim = $n - $w + 1; if ($lim < 1) $lim = $n == 0 ? 0 : 1;
-         |for (int $i = 0; $i < $lim; $i++) {
-         |  int $m = $i;
-         |  int $end = $i + $w; if ($end > $n) $end = $n;
-         |  for (int $j = $i + 1; $j < $end; $j++) {
-         |    if ($c.getLong($j) <= $c.getLong($m)) $m = $j;
-         |  }
-         |  if ($m != $last) { $out[$cnt++] = $c.getLong($m); $last = $m; }
-         |}
-         |long[] $res = java.util.Arrays.copyOf($out, $cnt);
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($res);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 object winnow {

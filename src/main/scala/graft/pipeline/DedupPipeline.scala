@@ -434,39 +434,32 @@ object DedupStages {
     // and an author column may differ between byte-identical texts) —
     // with a lev gate configured, every pair takes the full path
     val fastable = sigs.columns.contains("content_hash") &&
-      pairs.columns.contains("channels") &&
       cfg.titleLevMax.isEmpty && cfg.authorLevMax.isEmpty
     val isExact = array_contains(col("channels"), "exact")
     val weakPairs = if (fastable) pairs.where(!isExact) else pairs
     val exactPairs = if (fastable) pairs.where(isExact)
       else pairs.where(lit(false))
 
-    // side rows need shingle sets; a lean side (no `shingles` column but
-    // `text`) computes them here. The semi-join to the distinct pair
-    // participants comes FIRST — below the shingle projection — so only
-    // participants (~0.1% of the corpus at web scale) pay the shingling
-    // cost; without it Spark computes shingle sets for every row of the
-    // side relation, twice (a and b sides), silently re-paying the whole
-    // signature-scan cost in the verify stage. Exact-channel pairs
-    // contribute only their a side (the fast path reads one side).
-    val builtShingles = !sigs.columns.contains("shingles")
-    val withShingles =
-      if (!builtShingles) sigs
-      else participantSide(weakPairs, exactPairs, sigs, cfg)
+    // side rows need shingle sets, computed here from `text`. The
+    // semi-join to the distinct pair participants comes FIRST — below the
+    // shingle projection — so only participants (~0.1% of the corpus at
+    // web scale) pay the shingling cost; without it Spark computes
+    // shingle sets for every row of the side relation, twice (a and b
+    // sides), silently re-paying the whole signature-scan cost in the
+    // verify stage. Exact-channel pairs contribute only their a side (the
+    // fast path reads one side).
+    val withShingles = participantSide(weakPairs, exactPairs, sigs, cfg)
     val sideCols = Seq("url", "source", "lang") ++
       (if (fastable) Seq("content_hash") else Nil)
     // Levenshtein decision-list gates (cfg.titleLevMax/authorLevMax): the
     // normalized comparison strings ride the side relation (computed for
     // PARTICIPANTS only, like the shingle sets) and are consumed after the
     // set-similarity test below
-    val titleGate = cfg.titleLevMax.isDefined && withShingles.columns.contains("text")
+    val titleGate = cfg.titleLevMax.isDefined
     val authorGate = cfg.authorLevMax.isDefined && withShingles.columns.contains("author")
     val gateCols =
       (if (titleGate) Seq(graft.functions.normalization.normalizeText(col("text")).as("nrm")) else Nil) ++
       (if (authorGate) Seq(graft.functions.normalization.normalizeText(col("author")).as("anrm")) else Nil)
-    val side0 = withShingles.select(
-      ((col("doc_id").as("jid") +: sideCols.map(col)) ++ gateCols) :+
-        col("shingles") :+ col("n_shingles"): _*)
     // Round-6: the side relation is consumed up to three times (weak a,
     // weak b, exact fast-path a), and the planner's exchange reuse did
     // NOT deduplicate the copies — the executed sf0.1 plan showed the
@@ -476,11 +469,11 @@ object DedupStages {
     // 8-core run). A lazy localCheckpoint pins the participant-scale
     // rows ONCE — bounded by the participant fraction (the same budget
     // the semi-join already enforces), the exact pattern `counts` uses
-    // in candidatesFromProbes. Only the lean path pins: a side that
-    // arrives WITH shingle arrays (full-signature callers) would pin
-    // corpus-wide arrays — the anti-scaling materialization round 5
-    // removed.
-    val side = if (builtShingles) side0.localCheckpoint(false) else side0
+    // in candidatesFromProbes.
+    val side = withShingles.select(
+      ((col("doc_id").as("jid") +: sideCols.map(col)) ++ gateCols) :+
+        col("shingles") :+ col("n_shingles"): _*)
+      .localCheckpoint(false)
     val a = side.toDF(side.columns.map(_ + "_a"): _*)
     val b = side.toDF(side.columns.map(_ + "_b"): _*)
 

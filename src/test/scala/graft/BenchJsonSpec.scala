@@ -138,4 +138,13 @@ class BenchJsonSpec extends AnyFunSuite {
     assert(Bench.retryPlan(steadyLo = true, minWarmLo = false, 600.0).contains((true, 485.0)))
     assert(Bench.retryPlan(steadyLo = true, minWarmLo = false, 300.0).contains((false, 185.0)))
   }
+
+  test("hi leg past the host's cores is flagged, not banked silently") {
+    assert(Bench.coreGuardJson(hi = 8, hostCores = 8) == "")
+    assert(Bench.coreGuardJson(hi = 8, hostCores = 32) == "")
+    val n = parse(s""""cores_n":2,"cores_4n":8${Bench.coreGuardJson(hi = 8, hostCores = 4)}""")
+    assert(n.get("cores_4n").asInt() == 8)
+    assert(n.get("host_cores").asInt() == 4)
+    assert(n.get("insufficient_cores").asBoolean())
+  }
 }

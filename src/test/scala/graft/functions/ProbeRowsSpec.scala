@@ -10,7 +10,11 @@ import graft.pipeline.{DedupConfig, DedupStages}
   * composed-builtin probe chain BIT-FOR-BIT — bucket keys feed the
   * persisted incremental index, so key drift would silently break
   * incremental probing. The reference here IS the old chain, rebuilt
-  * from the still-shipping primitive expressions. */
+  * from the primitive expressions. Both sides run the same signature
+  * kernels (SignatureSpec's golden folds pin their arithmetic), so this
+  * spec pins what ProbeRowsFor does on its own: the byte-walk tokenizer
+  * and token hash, the first-occurrence anchor distinct, the xxhash64
+  * key fold, the per-document row order and null propagation. */
 class ProbeRowsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -50,15 +54,7 @@ class ProbeRowsSpec extends AnyFunSuite {
         col("doc_id"), col("p.tag").as("tag"))
   }
 
-  private val fixtures = Seq(
-    (1L, "the quick brown fox jumps over the lazy dog again and again and again"),
-    (2L, "a"),                                  // single token
-    (3L, ""),                                   // empty string → one empty token
-    (4L, "a  b"),                               // double space → empty middle token
-    (5L, " leading and trailing "),             // boundary empties
-    (6L, "Ärger naïve façade 中文 слова"),       // multibyte UTF-8 tokens
-    (7L, ("w " * 200).trim),                    // repetitive long doc
-    (8L, (0 until 80).map(i => s"tok$i").mkString(" "))) // all-distinct long doc
+  import ProbeRowsSpec.fixtures
 
   private def rows(df: DataFrame): Set[(String, Long, Long, Long)] =
     df.collect().map(r =>
@@ -66,8 +62,10 @@ class ProbeRowsSpec extends AnyFunSuite {
 
   test("fused probe rows == legacy composed-builtin chain, bit for bit") {
     val pw = fixtures.toDF("doc_id", "text")
-    val fused = rows(DedupStages.probeRows(pw, cfg))
-    val legacy = rows(legacyProbeRows(pw))
+    def ordered(df: DataFrame) = df.collect().toSeq.map(r =>
+      (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    val fused = ordered(DedupStages.probeRows(pw, cfg))
+    val legacy = ordered(legacyProbeRows(pw))
     assert(fused == legacy)
     assert(fused.nonEmpty)
   }
@@ -90,4 +88,17 @@ class ProbeRowsSpec extends AnyFunSuite {
     val fused = rows(DedupStages.probeRows(pw, cfg))
     assert(fused == fromSigs)
   }
+}
+
+/** Probe-row edge cases, shared with SignatureSpec's golden probe fold. */
+object ProbeRowsSpec {
+  val fixtures = Seq(
+    (1L, "the quick brown fox jumps over the lazy dog again and again and again"),
+    (2L, "a"),                                  // single token
+    (3L, ""),                                   // empty string → one empty token
+    (4L, "a  b"),                               // double space → empty middle token
+    (5L, " leading and trailing "),             // boundary empties
+    (6L, "Ärger naïve façade 中文 слова"),       // multibyte UTF-8 tokens
+    (7L, ("w " * 200).trim),                    // repetitive long doc
+    (8L, (0 until 80).map(i => s"tok$i").mkString(" "))) // all-distinct long doc
 }

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
@@ -10,7 +11,10 @@ import graft.SparkTestSession
  *  - MinHash agreement ≈ Jaccard (±ε at k=128)
  *  - LSH band guarantee: high-J pairs share ≥1 band w.h.p.
  *  - SimHash: near-identical token bags → small Hamming distance
- *  - Expression eval (interpreted) == codegen'd DataFrame eval
+ *  - Expression eval (interpreted) == whole-stage-codegen'd DataFrame
+ *    eval, for the five signature kernels and the fused probe rows
+ *  - golden folds of every kernel's output and of the fused probe rows,
+ *    measured once: the arithmetic the persisted probe index depends on
  */
 class SignatureSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -80,26 +84,119 @@ class SignatureSpec extends AnyFunSuite {
     assert(dFar >= 16, s"far hamming $dFar")
   }
 
+  /** 64 seeded inputs of length 0–300: the empty array, one and two
+    * elements, lengths on both sides of the shingle (3, 24) and winnow
+    * (16) widths, then random lengths; every fourth array draws from a
+    * tiny value range so winnowing sees ties and SimHash repeated votes. */
+  private lazy val kernelInputs: Seq[Array[Long]] = {
+    val rnd = new Random(20261017)
+    val lengths = Seq(0, 1, 2, 3, 4, 15, 16, 17, 23, 24, 25, 300) ++
+      Seq.fill(52)(rnd.nextInt(301))
+    lengths.zipWithIndex.map { case (len, i) =>
+      Array.fill(len)(if (i % 4 == 3) rnd.nextInt(8).toLong else rnd.nextLong())
+    }
+  }
+
+  /** Order- and length-sensitive fold of a sequence of long arrays. */
+  private def foldLongs(xs: Seq[Array[Long]]): Long =
+    xs.foldLeft(17L)((acc, a) =>
+      a.foldLeft(acc * 31 + a.length)((h, x) => (h ^ x) * 0x100000001B3L))
+
+  private def longs(v: Any): Array[Long] =
+    v.asInstanceOf[ArrayData].toLongArray()
+
+  test("golden values pin the signature kernel arithmetic") {
+    val in = kernelInputs.map(a => ArrayData.toArrayData(a))
+    val minhash = in.map(a => longs(MinHashSignature(null, 128, 42L).nullSafeEval(a)))
+    val got = Map(
+      "shingle_3" -> foldLongs(in.map(a => longs(ShingleHashes(null, 3).nullSafeEval(a)))),
+      "shingle_24" -> foldLongs(in.map(a => longs(ShingleHashes(null, 24).nullSafeEval(a)))),
+      "minhash_128" -> foldLongs(minhash),
+      "bands_32x4" -> foldLongs(minhash.map(s =>
+        longs(LshBandHashes(null, 32, 4).nullSafeEval(ArrayData.toArrayData(s))))),
+      "simhash" -> foldLongs(Seq(in.map(a =>
+        SimHash64(null).nullSafeEval(a).asInstanceOf[Long]).toArray)),
+      "winnow_16" -> foldLongs(in.map(a => longs(WinnowAnchors(null, 16).nullSafeEval(a)))))
+    // measured values: a change to any of them moves persisted bucket keys
+    val expected = Map(
+      "shingle_3" -> -5933898892395336813L,
+      "shingle_24" -> 1031379806466321338L,
+      "minhash_128" -> -2008408552806573778L,
+      "bands_32x4" -> -1508737329644982380L,
+      "simhash" -> -368326746695057235L,
+      "winnow_16" -> 4596112603105458995L)
+    assert(got == expected, s"kernel folds: $got")
+  }
+
+  test("golden values pin the fused probe rows") {
+    import graft.pipeline.{DedupConfig, DedupStages}
+    val corpus = graft.fixtures.CorpusGen.generate(seed = 11L, nBase = 200)
+    val docs = ProbeRowsSpec.fixtures ++
+      corpus.pages.zipWithIndex.map { case (p, i) => (100L + i, p.text) }
+    val r = DedupStages.probeRows(docs.toDF("doc_id", "text"), DedupConfig())
+      .agg(count(lit(1)), expr("bit_xor(xxhash64(channel, bucket_key, doc_id, tag))"))
+      .head()
+    assert((r.getLong(0), r.getLong(1)) == ((16364L, -4318954151110399962L)),
+      s"probe rows: (${r.getLong(0)}, ${r.getLong(1)})")
+  }
+
   test("interpreted eval matches codegen eval for all signature expressions") {
-    val rows = Seq.tabulate(50)(i => Tuple1(Seq.fill(20 + i)(new Random(i).nextLong())))
-    val df = rows.toDF("s").select(
-      col("s"),
-      signatures.minhashSignature(col("s"), 16, 1L).as("mh"),
-      signatures.simhash64(col("s")).as("sh"),
-      graft.functions.TextColumns.shingleHashes(col("s"), 3).as("sg"))
-    val fromCodegen = df.collect()
-    // interpreted path: direct nullSafeEval
-    rows.zip(fromCodegen).foreach { case (Tuple1(s), row) =>
-      import org.apache.spark.sql.catalyst.util.ArrayData
-      val arr = ArrayData.toArrayData(s.toArray)
-      val mh = MinHashSignature(null, 16, 1L).nullSafeEval(arr)
-        .asInstanceOf[ArrayData].toLongArray.toSeq
-      val sh = SimHash64(null).nullSafeEval(arr).asInstanceOf[Long]
-      val sg = ShingleHashes(null, 3).nullSafeEval(arr)
-        .asInstanceOf[ArrayData].toLongArray.toSeq
-      assert(row.getSeq[Long](1) == mh)
-      assert(row.getLong(2) == sh)
-      assert(row.getSeq[Long](3) == sg)
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.pipeline.{DedupConfig, DedupStages}
+    // an RDD input: a local Seq would plan as a LocalRelation, which
+    // ConvertToLocalRelation evaluates on the driver, interpreted; with
+    // fallback off, a generated-code compile error fails the test
+    // instead of silently running the interpreted path
+    val confs = Map("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    def assertCodegen(df: org.apache.spark.sql.DataFrame): Unit = {
+      val plan = df.queryExecution.executedPlan
+      assert(plan.exists(_.isInstanceOf[WholeStageCodegenExec]), s"not codegen'd:\n$plan")
+    }
+    try {
+      val df = spark.sparkContext.parallelize(kernelInputs.map(a => Tuple1(a.toSeq)), 4)
+        .toDF("s").select(
+          signatures.minhashSignature(col("s"), 16, 1L).as("mh"),
+          signatures.lshBandHashes(signatures.minhashSignature(col("s"), 16, 1L), 4, 4).as("lb"),
+          signatures.simhash64(col("s")).as("sh"),
+          TextColumns.shingleHashes(col("s"), 3).as("sg"),
+          winnow.winnowAnchors(col("s"), 4).as("wa"))
+      assertCodegen(df)
+      val fromCodegen = df.collect()
+      assert(fromCodegen.length == kernelInputs.size)
+      kernelInputs.zip(fromCodegen).foreach { case (s, row) =>
+        val arr = ArrayData.toArrayData(s)
+        val mh = MinHashSignature(null, 16, 1L).nullSafeEval(arr)
+        assert(row.getSeq[Long](0) == longs(mh).toSeq)
+        assert(row.getSeq[Long](1) == longs(LshBandHashes(null, 4, 4).nullSafeEval(mh)).toSeq)
+        assert(row.getLong(2) == SimHash64(null).nullSafeEval(arr).asInstanceOf[Long])
+        assert(row.getSeq[Long](3) == longs(ShingleHashes(null, 3).nullSafeEval(arr)).toSeq)
+        assert(row.getSeq[Long](4) == longs(WinnowAnchors(null, 4).nullSafeEval(arr)).toSeq)
+      }
+
+      val cfg = DedupConfig()
+      val docs = ProbeRowsSpec.fixtures
+      val probes = DedupStages.probeRows(spark.sparkContext.parallelize(docs, 4)
+        .toDF("doc_id", "text"), cfg)
+      assertCodegen(probes)
+      val fused = ProbeRowsFor(null, cfg.shingleSize, cfg.substrWindow, cfg.winnowWindow,
+        cfg.minhashK, cfg.bands, cfg.rowsPerBand, cfg.seed)
+      val expected = docs.flatMap { case (id, text) =>
+        val out = fused.nullSafeEval(UTF8String.fromString(text)).asInstanceOf[ArrayData]
+        (0 until out.numElements()).map { i =>
+          val p = out.getStruct(i, 3)
+          (p.getUTF8String(0).toString, p.getLong(1), id, p.getLong(2))
+        }
+      }
+      val got = probes.collect().toSeq.map(r =>
+        (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      assert(got == expected)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 
