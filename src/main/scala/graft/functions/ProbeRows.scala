@@ -126,18 +126,10 @@ object ProbeRowsFor {
     val sim = SimHash64.simhash(sa)
     val bandHashes = LshBandHashes.bandHashes(
       MinHashSignature.minima(sa, coefA, coefB), bands, rowsPerBand)
-    val anchorsAll = WinnowAnchors.anchors(ShingleHashes.hashes(th, substrN), winnowW)
-
-    // ---- first-occurrence anchor distinct (≡ array_distinct(...))
-    val nAnchor = anchorsAll.length
-    val seen = new java.util.HashSet[java.lang.Long](math.max(4, nAnchor * 2))
-    val anchors = new Array[Long](nAnchor)
-    var nDistinct = 0
-    i = 0
-    while (i < nAnchor) {
-      if (seen.add(anchorsAll(i))) { anchors(nDistinct) = anchorsAll(i); nDistinct += 1 }
-      i += 1
-    }
+    // first-occurrence anchor distinct (≡ array_distinct(...))
+    val anchors = distinctInOrder(
+      WinnowAnchors.anchors(ShingleHashes.hashes(th, substrN), winnowW))
+    val nDistinct = anchors.length
 
     // ---- probe rows: band keys, simhash chunk keys, anchor keys — the
     // multi-arg xxhash64 fold (seed 42; int operands via hashInt, long
@@ -169,6 +161,34 @@ object ProbeRowsFor {
       i += 1
     }
     new GenericArrayData(out)
+  }
+
+  /** First-occurrence distinct of xs, in input order (≡ array_distinct):
+    * linear probing over a primitive power-of-two table at most half
+    * full, so no value is boxed. 0 marks an empty slot; the value 0
+    * itself is tracked by a flag. */
+  private[functions] def distinctInOrder(xs: Array[Long]): Array[Long] = {
+    val n = xs.length
+    val cap = Integer.highestOneBit(math.max(2, n) * 2 - 1) << 1
+    val mask = cap - 1
+    val shift = 64 - Integer.numberOfTrailingZeros(cap)
+    val table = new Array[Long](cap)
+    var seenZero = false
+    val out = new Array[Long](n)
+    var cnt = 0
+    var i = 0
+    while (i < n) {
+      val x = xs(i)
+      if (x == 0L) {
+        if (!seenZero) { seenZero = true; out(cnt) = x; cnt += 1 }
+      } else {
+        var slot = ((x * 0x9E3779B97F4A7C15L) >>> shift).toInt
+        while (table(slot) != 0L && table(slot) != x) slot = (slot + 1) & mask
+        if (table(slot) == 0L) { table(slot) = x; out(cnt) = x; cnt += 1 }
+      }
+      i += 1
+    }
+    if (cnt == n) out else java.util.Arrays.copyOf(out, cnt)
   }
 }
 

@@ -79,7 +79,11 @@ case class MinHashSignature(child: Expression, k: Int, seed: Long)
 object MinHashSignature {
   /** The k minima of h(x) = a(j)*x + b(j) over xs (Long.MaxValue when xs
     * is empty). Called from generated code (static forwarder on the
-    * companion class). */
+    * companion class).
+    *
+    * The slot update is a branch-free signed min (no compare-and-store),
+    * so the JIT can vectorize the sweep over the k slots; it keeps
+    * exactly the minima of `if (v < sig(j)) sig(j) = v`. */
   def minima(xs: Array[Long], coefA: Array[Long], coefB: Array[Long]): Array[Long] = {
     val k = coefA.length
     val sig = new Array[Long](k)
@@ -90,7 +94,11 @@ object MinHashSignature {
       var j = 0
       while (j < k) {
         val v = coefA(j) * h + coefB(j)
-        if (v < sig(j)) sig(j) = v
+        val m = sig(j)
+        // all ones iff v < m: the sign of v - m, corrected where it overflows
+        val d = v - m
+        val lt = (d ^ ((v ^ m) & (d ^ v))) >> 63
+        sig(j) = m ^ ((v ^ m) & lt)
         j += 1
       }
       i += 1
@@ -175,27 +183,54 @@ case class SimHash64(child: Expression)
 }
 
 object SimHash64 {
+  private final val ByteOnes = 0x0101010101010101L
+
   /** Bit b is set iff more of xs have bit b set than clear. Called from
-    * generated code (static forwarder on the companion class). */
+    * generated code (static forwarder on the companion class).
+    *
+    * SWAR vote: lane s accumulates (h >>> s) & 0x01..01, so byte k of
+    * lane s counts bit 8k+s over the words seen. A byte holds at most
+    * 255, so the lanes are flushed into 64 Int counts every 255 words.
+    * "Votes for > votes against" is ones - (n - ones) > 0, i.e.
+    * 2·ones > n. */
   def simhash(xs: Array[Long]): Long = {
-    val acc = new Array[Int](64)
+    val n = xs.length
+    val ones = new Array[Int](64)
     var i = 0
-    while (i < xs.length) {
-      val h = xs(i)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) acc(b) += 1 else acc(b) -= 1
-        b += 1
+    while (i < n) {
+      val end = if (n - i <= 255) n else i + 255
+      var l0, l1, l2, l3, l4, l5, l6, l7 = 0L
+      while (i < end) {
+        val h = xs(i)
+        l0 += h & ByteOnes
+        l1 += (h >>> 1) & ByteOnes
+        l2 += (h >>> 2) & ByteOnes
+        l3 += (h >>> 3) & ByteOnes
+        l4 += (h >>> 4) & ByteOnes
+        l5 += (h >>> 5) & ByteOnes
+        l6 += (h >>> 6) & ByteOnes
+        l7 += (h >>> 7) & ByteOnes
+        i += 1
       }
-      i += 1
+      flush(ones, l0, 0); flush(ones, l1, 1); flush(ones, l2, 2); flush(ones, l3, 3)
+      flush(ones, l4, 4); flush(ones, l5, 5); flush(ones, l6, 6); flush(ones, l7, 7)
     }
     var out = 0L
     var b = 0
     while (b < 64) {
-      if (acc(b) > 0) out |= (1L << b)
+      if (2L * ones(b) > n) out |= (1L << b)
       b += 1
     }
     out
+  }
+
+  /** Adds the eight byte counts of `lane` (bit 8k+s in byte k) to `ones`. */
+  private def flush(ones: Array[Int], lane: Long, s: Int): Unit = {
+    var k = 0
+    while (k < 8) {
+      ones(8 * k + s) += ((lane >>> (8 * k)) & 0xFFL).toInt
+      k += 1
+    }
   }
 }
 

@@ -45,24 +45,35 @@ case class WinnowAnchors(child: Expression, w: Int)
 
 object WinnowAnchors {
   /** The winnowed anchors of xs in window order (not distinct). Called
-    * from generated code (static forwarder on the companion class). */
+    * from generated code (static forwarder on the companion class).
+    *
+    * O(n): a monotone deque of indices whose values rise strictly from
+    * front to back. A new index first pops every back entry whose value
+    * is >= its own, so the front is always the window's rightmost
+    * minimum — the tie rule of the per-window scan. */
   def anchors(xs: Array[Long], w: Int): Array[Long] = {
     val n = xs.length
     if (n == 0) return Array.emptyLongArray
     val out = new Array[Long](n)
+    val dq = new Array[Int](n) // each index enters once: no wrap-around
+    var head = 0
+    var tail = 0
+    var next = 0 // next index to enter the deque
     var cnt = 0
     var last = -1 // index of previously selected anchor
     var i = 0
     val lim = math.max(1, n - w + 1)
     while (i < lim) {
-      // rightmost minimum of window [i, i+w)
-      var m = i
-      var j = i + 1
-      val end = math.min(i + w, n)
-      while (j < end) {
-        if (xs(j) <= xs(m)) m = j
-        j += 1
+      val end = if (n - i <= w) n else i + w // min(i + w, n) without Int overflow
+      while (next < end) {
+        val v = xs(next)
+        while (tail > head && xs(dq(tail - 1)) >= v) tail -= 1
+        dq(tail) = next
+        tail += 1
+        next += 1
       }
+      while (dq(head) < i) head += 1
+      val m = dq(head)
       if (m != last) { out(cnt) = xs(m); cnt += 1; last = m }
       i += 1
     }

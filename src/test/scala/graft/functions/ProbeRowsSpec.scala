@@ -77,6 +77,19 @@ class ProbeRowsSpec extends AnyFunSuite {
     assert(fused.where(col("doc_id") === 1L).count() > 0)
   }
 
+  test("primitive anchor distinct keeps first occurrences in order") {
+    val rnd = new scala.util.Random(3)
+    // 0 is the empty-slot marker; draws with repeats from a pool of 300
+    // random longs collide in the table, so repeats are found past the
+    // first probed slot
+    val pool = Array.fill(300)(rnd.nextLong()) :+ 0L
+    val inputs = Seq(Array.emptyLongArray, Array(0L), Array(0L, 0L, 5L, 0L), Array(7L, 7L, 7L)) ++
+      (0 until 40).map(i => Array.fill(rnd.nextInt(600))(
+        if (i % 2 == 0) rnd.nextInt(6).toLong - 2 else pool(rnd.nextInt(pool.length))))
+    inputs.foreach(xs =>
+      assert(ProbeRowsFor.distinctInOrder(xs).toSeq == xs.toSeq.distinct, xs.mkString(",")))
+  }
+
   test("fused keys match probeTable keys (persisted-index compatibility)") {
     val pw = DedupStages.withIds(DedupStages.pagesFromDocuments(
       fixtures.toDF("doc_id", "text").select(col("doc_id"),

@@ -128,6 +128,36 @@ class SignatureSpec extends AnyFunSuite {
     assert(got == expected, s"kernel folds: $got")
   }
 
+  test("kernels equal the naive reference loops on flush, tail, saturation and tie inputs") {
+    import SignatureSpec.{naiveAnchors, naiveMinima, naiveSimhash}
+    val rnd = new Random(5)
+    // 0–8; the SWAR flush edges (255 words per flush); n % 4 = 1, 2, 3
+    val lengths = (0 to 8) ++ Seq(254, 255, 256, 509, 510, 511, 766) ++
+      Seq(97, 98, 99, 1001, 1002, 1003)
+    // constant words: all-ones fills every SWAR byte to exactly 255 per
+    // flush, 0xAA../0x55.. fill alternate lanes, all-zero none; all-ones
+    // interleaved with all-zero ties every bit at even n
+    val fills = Seq(-1L, 0L, 0xAAAAAAAAAAAAAAAAL, 0x5555555555555555L)
+    val inputs = lengths.flatMap { len =>
+      Seq(Array.fill(len)(rnd.nextLong()),
+        Array.fill(len)(rnd.nextInt(5).toLong), // tie-heavy: values 0–4
+        Array.tabulate(len)(i => if (i % 2 == 0) -1L else 0L),
+        Array.tabulate(len)(i => if (i % 3 == 0) 0L else -1L)) ++
+        fills.map(f => Array.fill(len)(f))
+    }
+    val (a128, b128) = SignatureCoefficients.linearPerms(128, 42L)
+    val (a3, b3) = SignatureCoefficients.linearPerms(3, 1L)
+    for (xs <- inputs) {
+      val what = s"n=${xs.length} head=${xs.take(4).mkString(",")}"
+      assert(SimHash64.simhash(xs) == naiveSimhash(xs), what)
+      assert(MinHashSignature.minima(xs, a128, b128).sameElements(naiveMinima(xs, a128, b128)), what)
+      assert(MinHashSignature.minima(xs, a3, b3).sameElements(naiveMinima(xs, a3, b3)), what)
+      // w = 1, and windows both shorter and longer than n
+      for (w <- Seq(1, 2, 3, 4, 16, 64, 2000))
+        assert(WinnowAnchors.anchors(xs, w).sameElements(naiveAnchors(xs, w)), s"$what w=$w")
+    }
+  }
+
   test("golden values pin the fused probe rows") {
     import graft.pipeline.{DedupConfig, DedupStages}
     val corpus = graft.fixtures.CorpusGen.generate(seed = 11L, nBase = 200)
@@ -209,5 +239,36 @@ class SignatureSpec extends AnyFunSuite {
       assert(row.getString(0) == graft.text.Normalize.normalize(in))
       assert(row.getString(1) == graft.text.Normalize.createTitleKey(in))
     }
+  }
+}
+
+/** The naive kernel loops the shipped kernels are checked against. */
+object SignatureSpec {
+  /** Per bit, +1 for every word with the bit set and -1 for every word
+    * with it clear; the output bit is set iff the sum is positive. */
+  def naiveSimhash(xs: Array[Long]): Long = {
+    val acc = new Array[Int](64)
+    for (h <- xs; b <- 0 until 64) acc(b) += (if (((h >>> b) & 1L) == 1L) 1 else -1)
+    (0 until 64).foldLeft(0L)((out, b) => if (acc(b) > 0) out | (1L << b) else out)
+  }
+
+  /** k×n: every coefficient pair against every value. */
+  def naiveMinima(xs: Array[Long], coefA: Array[Long], coefB: Array[Long]): Array[Long] =
+    coefA.indices.map(j => xs.foldLeft(Long.MaxValue)((m, h) =>
+      math.min(m, coefA(j) * h + coefB(j)))).toArray
+
+  /** O(w·n): scan each window for its rightmost minimum; emit it unless
+    * it is the anchor the previous window chose. */
+  def naiveAnchors(xs: Array[Long], w: Int): Array[Long] = {
+    val n = xs.length
+    if (n == 0) return Array.emptyLongArray
+    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
+    var last = -1
+    for (i <- 0 until math.max(1, n - w + 1)) {
+      var m = i
+      for (j <- i + 1 until math.min(i + w, n)) if (xs(j) <= xs(m)) m = j
+      if (m != last) { out += xs(m); last = m }
+    }
+    out.toArray
   }
 }

@@ -36,6 +36,57 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("BroadcastNestedLoopJoin"), "nested loop join in candidate plan")
   }
 
+  test("one run scans probe_rows_for in exactly two query stages when no bucket is over the cap") {
+    import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.graftbridge.ListenerBridge
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    // the final (AQE) plan of every action the run executes
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val pages = parquetPages
+    ListenerBridge.drain(spark)
+    spark.listenerManager.register(listener)
+    val result =
+      try { val r = DedupPipeline.run(spark, pages, cfg); ListenerBridge.drain(spark); r }
+      finally spark.listenerManager.unregister(listener)
+    assert(result.droppedBuckets.count() == 0, "fixture must keep every bucket under bucketCap")
+
+    // Stages that run the probe generator: the plan of each query stage,
+    // without the stages below it. A cached relation's plan runs inside
+    // the first action that reads it, so it is walked once, where it is
+    // first met, not once per consumer.
+    val cachesWalked = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
+    def probeStages(root: SparkPlan): Int = {
+      var scans = false
+      var below = 0
+      def walk(p: SparkPlan): Unit = p match {
+        case a: AdaptiveSparkPlanExec => below += probeStages(a.executedPlan)
+        case q: QueryStageExec => below += probeStages(q.plan)
+        case m: InMemoryTableScanExec =>
+          if (cachesWalked.add(m.relation.cacheBuilder)) below += probeStages(m.relation.cachedPlan)
+        case g: GenerateExec if g.generator.toString.contains("probe_rows_for") =>
+          scans = true
+          g.children.foreach(walk)
+        case other => other.children.foreach(walk)
+      }
+      walk(root)
+      below + (if (scans) 1 else 0)
+    }
+    // the bucket counts pass and the tagged join; the star branch over an
+    // empty hot set is pruned at run time
+    val n = plans.asScala.toSeq.map(probeStages).sum
+    spark.catalog.clearCache() // later specs plan over these pages uncached
+    assert(n == 2, s"probe_rows_for ran in $n query stages, expected 2")
+  }
+
   test("verify stage shingles only pair participants: semi-join sits below the shingle projection") {
     import org.apache.spark.sql.functions.{array_contains, col, lit}
     val pw = DedupStages.withIds(parquetPages).cache()
