@@ -11,7 +11,8 @@ import org.apache.spark.sql.types._
 
 /**
  * Fused clique-pair expansion for the candidate stage: given a bucket's
- * CappedCollect output — aligned (ids, tags) long arrays — produce every
+ * members as aligned (ids, tags) long arrays — the two fields of one
+ * collect_list(struct(doc_id, tag)) — produce every
  * unordered member pair, sorted so each pair is canonical, as
  * `array<struct<a: struct<u, t>, b: struct<u, t>>>`.
  *
@@ -29,10 +30,11 @@ import org.apache.spark.sql.types._
  * common-subexpression elimination. This is one primitive sort + one
  * preallocated output array per bucket, with codegen via a static call.
  *
- * Contract: ids and tags MUST be the same length (CappedCollect emits
- * aligned buffers) — enforced with require, where zip_with would have
- * silently null-padded. Null arrays → null (nullIntolerant); null
- * ELEMENTS cannot occur (CappedCollect collects non-null longs).
+ * Contract: ids and tags MUST be the same length (fields of one struct
+ * array are aligned by construction) — enforced with require, where
+ * zip_with would have silently null-padded. Null arrays → null
+ * (nullIntolerant); null ELEMENTS cannot occur (doc_id and tag are
+ * non-null longs).
  * Output size is n(n-1)/2 — callers gate n at the bucket cap, exactly
  * as they did around the composed form.
  */

@@ -296,11 +296,11 @@ object DedupStages {
 
   /** Stage 2 — candidate pairs from a (channel, bucket_key, doc_id, tag)
     * probe relation (`probeRows`, or `probeTable` over full signatures;
-    * the incremental pass restricts it to dirty-touching buckets,
-    * graft.pipeline.IncrementalDedup), unioned with the exact channel and
-    * tagged with the channels that produced each pair (the reference
-    * records which key family matched only in logs; we keep it
-    * queryable). Returns (pairs, droppedBucketsLog). */
+    * the incremental core, graft.pipeline.IncrementalDedup.pass, restricts
+    * it to dirty-touching buckets for both of its state readers), unioned
+    * with the exact channel and tagged with the channels that produced
+    * each pair (the reference records which key family matched only in
+    * logs; we keep it queryable). Returns (pairs, droppedBucketsLog). */
   def candidatesFromProbes(probes: DataFrame, sigs: DataFrame,
                            cfg: DedupConfig): (DataFrame, DataFrame) = {
     // One counting pass (map-side partial agg → tiny shuffle) classifies
@@ -327,7 +327,7 @@ object DedupStages {
     // shuffle join, and AQE converts it to a broadcast at run time when
     // the materialized counts are small. The probe-row exchange of the
     // shuffle shape doubles as the per-bucket aggregation's partitioning
-    // (no second exchange before CappedCollect), and the shape holds at
+    // (no second exchange before the member collect), and the shape holds at
     // bucket cardinalities past broadcast limits.
     //
     // Per-branch build-side filters (cold = under-cap, hot = over-cap) so
@@ -339,11 +339,10 @@ object DedupStages {
     val hot = counts.where(col("bucket_n") > cfg.bucketCap)
     val tagged = probes.join(cold, Seq("channel", "bucket_key"))
 
-    // normal buckets: bounded member collect + in-task clique expansion
-    // (partial ObjectHashAggregate combines map-side, so only capped
-    // buffers — never raw member lists — cross the wire)
-    val collect = org.apache.spark.sql.functions.udaf(
-      new graft.functions.CappedCollect(cfg.bucketCap))
+    // normal buckets: member collect + in-task clique expansion. The join
+    // above keeps only buckets of bucket_n <= bucketCap members, so the
+    // builtin collect_list is already bounded by the cap; collecting
+    // (doc_id, tag) structs keeps ids and tags aligned by construction.
     // round-6: sort+zip+pair-expand fused into one native expression
     // (graft.functions.SortedCliquePairs) — the composed
     // pairExpand(array_sort(zip_with(...))) chain walked five
@@ -351,9 +350,9 @@ object DedupStages {
     // pinned in CliquePairsSpec
     val cliquePairs = tagged
       .groupBy(col("channel"), col("bucket_key"))
-      .agg(collect(col("doc_id"), col("tag")).as("g"))
+      .agg(collect_list(struct(col("doc_id"), col("tag"))).as("g"))
       .select(col("channel"), explode(graft.functions.cliquepairs
-        .sortedCliquePairs(col("g.ids"), col("g.tags"))).as("p"))
+        .sortedCliquePairs(col("g.doc_id"), col("g.tag"))).as("p"))
       // SimHash buckets carry the full simhash as tag: apply the exact
       // Hamming residual; other families pair unconditionally
       .where(col("channel") =!= "simhash" ||

@@ -1,11 +1,15 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
- * Incremental re-dedup of a new `pages` snapshot against a previous run —
- * the Spark form of the reference's dirty-record pass:
+ * Incremental re-dedup against a previous run — the Spark form of the
+ * reference's dirty-record pass. ONE core (`pass`) applies every rule;
+ * a small `PrevReader` supplies the previous state. Two readers exist:
+ * the in-memory `PrevState` of a previous `DedupPipeline.run` (here, used
+ * by `run`/`runDelta`) and the bucket-pruned delta logs of
+ * graft.streaming.StreamingDedup. The rules:
  *
  *  - content-hash short-circuit: rows whose (url, md5(text)) is unchanged
  *    keep their previous signatures, no recompute
@@ -15,9 +19,9 @@ import org.apache.spark.sql.functions._
  *    dirty doc — the batch equivalent of probing the key indexes per
  *    dirty record (classes/RecordManager.php:559-565,1326-1427)
  *  - pairs between two unchanged docs are carried over from the previous
- *    verified table; pairs touching a changed/deleted doc are dropped and
+ *    verified table; pairs touching a changed/removed doc are dropped and
  *    (for changed docs) rediscovered
- *  - deletes propagate: a vanished url loses its membership and the
+ *  - deletes propagate: a removed url loses its membership and the
  *    cluster re-forms without it (cluster shrink/dissolve,
  *    classes/RecordManager.php:1739-1761)
  *
@@ -39,12 +43,6 @@ object IncrementalDedup {
   final case class PrevState(signatures: DataFrame, probes: DataFrame,
                              verifiedPairs: DataFrame)
 
-  /** The probe rows freshly generated for the dirty set only — exposed so
-    * tests (and metrics) can assert the incremental pass's input scan
-    * scales with the dirty set, not the corpus. */
-  def freshProbes(deltaPw: DataFrame, cfg: DedupConfig): DataFrame =
-    DedupStages.probeRows(deltaPw, cfg)
-
   /** `full` is the complete new state (what a cold consumer reads);
     * the `delta*` frames are the O(dirty) INCREMENTS of this pass — what a
     * delta-log writer persists per batch (graft.io.DeltaLog, used by
@@ -56,94 +54,140 @@ object IncrementalDedup {
                                deltaProbes: DataFrame,
                                deltaVerified: DataFrame)
 
+  /** The previous state as the core reads it: one method per read. A
+    * reader may return MORE rows than the keys select — the core applies
+    * every restriction itself — so the in-memory reader hands back whole
+    * tables and the delta-log reader prunes to the partitions the keys
+    * fall in. */
+  trait PrevReader {
+    /** latest signature rows, at least those of the urls in `urls` */
+    def signaturesOf(urls: DataFrame): DataFrame
+    /** latest signature rows, at least those whose content_hash is in `hashes` */
+    def signaturesSharing(hashes: DataFrame): DataFrame
+    /** live probe rows, at least those in the (channel, bucket_key) buckets of `keys` */
+    def probesIn(keys: DataFrame): DataFrame
+    /** page rows of the NEW state (the upserts included), at least those
+      * of the doc ids in `ids` */
+    def pagesOf(ids: DataFrame): DataFrame
+    /** live verified pairs */
+    def verifiedPairs: DataFrame
+    /** the whole signature and probe views, read lazily for the Result */
+    def signatures: DataFrame
+    def probes: DataFrame
+  }
+
+  /** `PrevState` plus the new snapshot's pages. */
+  private final class InMemory(prev: PrevState, pages: DataFrame) extends PrevReader {
+    def signaturesOf(urls: DataFrame): DataFrame = prev.signatures
+    def signaturesSharing(hashes: DataFrame): DataFrame = prev.signatures
+    def probesIn(keys: DataFrame): DataFrame = prev.probes
+    def pagesOf(ids: DataFrame): DataFrame = pages
+    def verifiedPairs: DataFrame = prev.verifiedPairs
+    def signatures: DataFrame = prev.signatures
+    def probes: DataFrame = prev.probes
+  }
+
+  /** Re-dedup a whole new snapshot: upserts = `newPages`, removed = the
+    * previous urls missing from it. */
   def run(spark: SparkSession, prev: PrevState, newPages: DataFrame,
           cfg: DedupConfig = DedupConfig()): DedupPipeline.Result =
     runDelta(spark, prev, newPages, cfg).full
 
   def runDelta(spark: SparkSession, prev: PrevState, newPages: DataFrame,
                cfg: DedupConfig = DedupConfig()): DeltaResult = {
-    val pagesSrc = DedupStages.withSource(newPages)
-    val newHashes = pagesSrc.select(col("url"), md5(col("text")).as("ch"))
+    val pages = DedupStages.withSource(newPages)
+    val removed = prev.signatures.select("url")
+      .join(pages.select("url"), Seq("url"), "left_anti")
+    pass(pages, removed, new InMemory(prev, pages), cfg)._1
+  }
 
-    // unchanged = same url AND same content hash as the previous run
-    val oldSigs = prev.signatures
-    val unchangedSigs = oldSigs.join(newHashes,
-      oldSigs("url") === newHashes("url") &&
-        oldSigs("content_hash") === newHashes("ch"), "left_semi")
-
-    // dirty = added or content-changed rows of the new snapshot
-    val oldKeys = oldSigs.select(col("url").as("u"), col("content_hash").as("ch"))
-    val dirtyPages = pagesSrc.join(oldKeys,
-      pagesSrc("url") === oldKeys("u") &&
-        md5(pagesSrc("text")) === oldKeys("ch"), "left_anti")
+  /** The incremental core: fold `upserts` (page rows, url = key) and the
+    * `removed` urls into the state `prev` reads. Returns the result and
+    * its cache pins, which a caller releases once it has consumed the
+    * result. */
+  def pass(upserts: DataFrame, removed: DataFrame, prev: PrevReader,
+           cfg: DedupConfig): (DeltaResult, Seq[DataFrame]) = {
+    // dirty = upserted rows that are new or content-changed vs the latest
+    // previous signature of their url
+    val prevKeys = prev.signaturesOf(upserts.select("url"))
+      .select(col("url").as("_pu"), col("content_hash").as("_pch"))
+    val dirtyPages = upserts.join(prevKeys,
+      upserts("url") === col("_pu") && md5(upserts("text")) === col("_pch"),
+      "left_anti")
 
     // re-sign only the dirty rows (lean rows; see leanSignatures). Ids are
     // xxhash64(url) (DedupStages.withIds) — globally deterministic, so a
-    // changed url keeps the SAME doc_id across rounds (its stale probes
-    // are dropped by the unchanged semi-join below and replaced by fresh
-    // ones) and no driver-side max-id action is needed.
-    val deltaSigs = DedupStages.leanSignatures(DedupStages.withIds(dirtyPages), cfg)
-    val sigs = unchangedSigs.unionByName(deltaSigs).cache()
-    val deltaIds = deltaSigs.select("doc_id")
+    // changed url keeps the SAME doc_id across rounds (its stale rows drop
+    // with the gone ids below and fresh ones replace them) and no
+    // driver-side max-id action is needed.
+    val deltaPw = DedupStages.withIds(dirtyPages)
+    // O(dirty) rows behind the whole dirty-detection + signature plan,
+    // consumed by the exact channel, the full view and a delta-log
+    // append: pin
+    val deltaSigs = DedupStages.leanSignatures(deltaPw, cfg).cache()
+    // O(dirty) rows, consumed by a bucket read, dirtyBuckets, probeSub,
+    // the full view and a delta-log append: pin
+    val deltaProbes = DedupStages.probeRows(deltaPw, cfg).cache()
+    // docs whose previous rows are stale: the dirty and the removed ones
+    val goneUrls = dirtyPages.select("url").unionByName(removed.select("url"))
+    val goneIds = deltaPw.select("doc_id")
+      .unionByName(removed.select(xxhash64(col("url")).as("doc_id")))
 
-    // id -> text side; consumed ONLY for (a) dirty-doc probe generation
-    // and (b) the verify stage, which semi-joins to pair participants
-    // before shingling — no unchanged-doc text is ever re-read in full
-    val pw = sigs.select("doc_id", "url", "source", "lang", "content_hash")
-      .join(pagesSrc.select("url", "text"), Seq("url")).cache()
-    val deltaPw = pw.join(deltaIds, Seq("doc_id"), "left_semi")
-
-    // probe rows: freshly computed for DIRTY docs only; unchanged docs'
-    // probes come from the stored index (narrow fixed-width rows, no text).
-    // Pinned: consumed three times (dirtyBuckets, probeSub, probesAll) and
-    // small (O(dirty) rows)
-    val deltaProbes = freshProbes(deltaPw, cfg).cache()
-    val unchangedProbes = prev.probes
-      .join(unchangedSigs.select("doc_id"), Seq("doc_id"), "left_semi")
-      .select("channel", "bucket_key", "doc_id", "tag")
-    // candidate regeneration only in buckets touching a dirty doc
+    // candidate regeneration only in buckets touching a dirty doc: the
+    // stored live probes of those buckets (a gone doc's stale rows drop)
+    // plus the fresh dirty-doc probes
     val dirtyBuckets = deltaProbes.select("channel", "bucket_key").distinct()
-    val probeSub = unchangedProbes
-      .unionByName(deltaProbes.select("channel", "bucket_key", "doc_id", "tag"))
+    val probeSub = prev.probesIn(deltaProbes.select("channel", "bucket_key"))
+      .join(goneIds, Seq("doc_id"), "left_anti")
       .join(dirtyBuckets, Seq("channel", "bucket_key"), "left_semi")
+      .unionByName(deltaProbes)
     // exact channel restricted the same way: only content-hash groups
     // containing a dirty doc are re-grouped (unchanged-unchanged exact
     // pairs are carried over with the rest of the verified table)
-    val dirtyHashes = sigs.join(deltaIds, Seq("doc_id"), "left_semi")
-      .select("content_hash").distinct()
-    val sigsForExact = sigs.join(dirtyHashes, Seq("content_hash"), "left_semi")
+    val dirtyHashes = deltaSigs.select("content_hash").distinct()
+    val sigsForExact = prev.signaturesSharing(dirtyHashes)
+      .join(goneIds, Seq("doc_id"), "left_anti")
+      .join(dirtyHashes, Seq("content_hash"), "left_semi")
+      .unionByName(deltaSigs)
     val (deltaPairs0, dropped) =
       DedupStages.candidatesFromProbes(probeSub, sigsForExact, cfg)
     // tiny pair table, whole candidate-generation plan behind it: pin it
-    // so verified()'s two consumers don't re-run candidate generation
+    // so its consumers (a bucket read, verify's two sides) don't re-run
+    // candidate generation
     val deltaPairs = deltaPairs0.cache()
-    val deltaVerified = DedupStages.verified(deltaPairs, pw, cfg)
 
-    // carry over previous pairs whose BOTH endpoints are unchanged urls
-    val liveUrls = unchangedSigs.select(col("url"))
+    // verify side: page text of the pair participants only (content_hash
+    // enables the exact-channel fast path)
+    val side = DedupStages.withIds(prev.pagesOf(
+        deltaPairs.select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))))
+      .withColumn("content_hash", md5(col("text")))
+    val deltaVerified = DedupStages.verified(deltaPairs, side, cfg)
+
+    // carry previous live pairs with no gone endpoint (anti-joins against
+    // the small gone set, not semi-joins against every live url)
     val carried = prev.verifiedPairs
-      .join(liveUrls.select(col("url").as("url_a")), Seq("url_a"), "left_semi")
-      .join(liveUrls.select(col("url").as("url_b")), Seq("url_b"), "left_semi")
-
-    // PINNED: the carried-pair union plan (two semi-joins over the whole
-    // previous verified table + the delta verify) is consumed by connected
-    // components, by the merge join, and by the caller reading
-    // Result.verifiedPairs — without the cache it would execute once per
-    // consumer (≥3×; expensive when the carried table is a 100-TB run's
-    // pair population)
+      .join(goneUrls.select(col("url").as("url_a")), Seq("url_a"), "left_anti")
+      .join(goneUrls.select(col("url").as("url_b")), Seq("url_b"), "left_anti")
+    // PINNED: consumed by connected components, the merge join, and the
+    // caller reading Result.verifiedPairs. The fold dedupes pairs the
+    // delta pass rediscovered between unchanged docs in a dirty bucket.
     val verifiedAll = DedupStages.foldVerified(carried, deltaVerified).cache()
 
-    val clusters = DedupStages.clusters(verifiedAll)
-    val merged = DedupStages.mergedClusters(clusters, pagesSrc)
-    // updated probe index for the NEXT incremental round: stored probes of
-    // surviving unchanged docs + fresh dirty-doc probes
-    val probesAll = unchangedProbes
-      .unionByName(deltaProbes.select("channel", "bucket_key", "doc_id", "tag"))
-    DeltaResult(
-      DedupPipeline.Result(sigs, probesAll, deltaPairs, dropped, verifiedAll,
+    val clusters = DedupStages.clusters(verifiedAll).cache()
+    // merge fold: page text of the cluster members (doc_id = xxhash64(url))
+    val merged = DedupStages.mergedClusters(clusters,
+      prev.pagesOf(clusters.select(xxhash64(col("url")).as("doc_id"))))
+
+    // full views for the Result are LAZY — the pass never materializes them
+    val sigsAll = prev.signatures.join(goneIds, Seq("doc_id"), "left_anti")
+      .unionByName(deltaSigs)
+    val probesAll = prev.probes.join(goneIds, Seq("doc_id"), "left_anti")
+      .unionByName(deltaProbes)
+    (DeltaResult(
+      DedupPipeline.Result(sigsAll, probesAll, deltaPairs, dropped, verifiedAll,
         clusters, merged),
-      deltaSignatures = deltaSigs,
-      deltaProbes = deltaProbes.select("channel", "bucket_key", "doc_id", "tag"),
-      deltaVerified = deltaVerified)
+      deltaSignatures = deltaSigs, deltaProbes = deltaProbes,
+      deltaVerified = deltaVerified),
+      Seq(deltaSigs, deltaProbes, deltaPairs, verifiedAll, clusters))
   }
 }

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 import graft.io.{DeltaLog, TableIO}
 import graft.pipeline.{DedupConfig, DedupPipeline, DedupStages, IncrementalDedup}
 
@@ -13,8 +14,9 @@ import graft.pipeline.{DedupConfig, DedupPipeline, DedupStages, IncrementalDedup
  * record batches update the record store, dirty records are re-deduped,
  * merged output is re-indexed. Here each micro-batch of pages rows is an
  * UPSERT set (url = key, latest wins); `foreachBatch` folds it into the
- * persisted state with a bucket-pruned specialization of
- * IncrementalDedup.runDelta.
+ * persisted state with the incremental core, IncrementalDedup.pass, which
+ * reads the previous state through this object's delta-log `LogReader`
+ * (the in-memory `PrevState` is the core's other reader).
  *
  * State I/O is O(batch) per micro-batch for WRITES (the reference writes
  * only dirty records back, classes/RecordManager.php:1988-1994): the four
@@ -235,139 +237,54 @@ object StreamingDedup {
   private def collectBuckets(df: DataFrame, bucket: Column): Seq[Int] =
     df.select(bucket.as("_b")).distinct().collect().map(_.getInt(0)).toSeq
 
-  /** Bucket-pruned upsert delta — the streaming specialization of
-    * IncrementalDedup.runDelta (same dirty-set / carried-pair / dirty-
-    * bucket-regeneration semantics, asserted equivalent to a cold run by
-    * StreamingDedupSpec) for a batch that is an UPSERT set (no deletes):
-    * prev-state reads prune to the url buckets the batch touches and the
-    * LSH-bucket partitions its dirty docs probe. */
-  private def upsertDelta(spark: SparkSession, b: DataFrame, stateDir: String,
-                          cfg: DedupConfig, bid: Long, nB: Int)
-      : (IncrementalDedup.DeltaResult, Seq[DataFrame]) = {
-    val before = Some(bid)
+  /** The delta logs as the incremental core's previous state. Reads are
+    * of the state BEFORE batch `bid` — the redelivery guard, see rawRead —
+    * except page reads, and each prunes to the `_ub` partitions its keys
+    * fall in. A log that does not exist yet reads as empty: a crash
+    * between the pages append and the later appends of an earlier batch
+    * leaves a pages log without the others. */
+  private final class LogReader(b: DataFrame, stateDir: String, cfg: DedupConfig,
+                                bid: Long, nB: Int) extends IncrementalDedup.PrevReader {
+    private val spark = b.sparkSession
+    private val before = Some(bid)
+    private def noSigs = DedupStages.leanSignatures(DedupStages.withIds(b.limit(0)), cfg)
+    private def noProbes = DedupStages.probeRows(DedupStages.withIds(b.limit(0)), cfg)
 
-    // dirty = batch rows that are new or content-changed vs the latest
-    // signature IN THE BATCH'S OWN URL BUCKETS (a batch url can only
-    // collide with prev state in its own bucket)
-    val touched = collectBuckets(b, urlBucket(nB))
-    val prevSigsT = rawRead(spark, stateDir, "signatures", before, Some(touched))
-      .map(d => dropMeta(latestPerUrl(d)))
-      .getOrElse(b.sparkSession.emptyDataFrame)
-    val dirtyPages =
-      if (prevSigsT.columns.isEmpty) b
-      else {
-        val prevKeys = prevSigsT.select(col("url").as("_pu"),
-          col("content_hash").as("_pch"))
-        b.join(prevKeys,
-          b("url") === col("_pu") && md5(b("text")) === col("_pch"),
-          "left_anti")
-      }
+    // a batch url can only collide with prev state in its own url bucket
+    def signaturesOf(urls: DataFrame): DataFrame =
+      rawRead(spark, stateDir, "signatures", before, Some(collectBuckets(urls, urlBucket(nB))))
+        .map(d => dropMeta(latestPerUrl(d))).getOrElse(noSigs)
 
-    val deltaPw = DedupStages.withIds(dirtyPages)
-    // O(dirty) rows behind the whole dirty-detection + signature plan,
-    // consumed by dirtyHashes, sigsForExact, sigsAll AND the delta-log
-    // append: pin (released with the per-batch pins below)
-    val deltaSigs = DedupStages.leanSignatures(deltaPw, cfg).cache()
-    // O(dirty) rows, consumed four times (bucket collect, dirtyBuckets,
-    // probeSub, delta append): pin
-    val deltaProbes = IncrementalDedup.freshProbes(deltaPw, cfg).cache()
-    val deltaIds = deltaPw.select("doc_id")
+    // the hash semi-join runs on the RAW narrow log first (urls sharing a
+    // hash), then latest-per-url resolves only those urls' rows — the
+    // window shuffle is O(matching urls), the scan is column-pruned
+    def signaturesSharing(hashes: DataFrame): DataFrame =
+      rawRead(spark, stateDir, "signatures", before).map { d =>
+        val raw = d.drop("_ub")
+        val urls = raw.join(hashes, Seq("content_hash"), "left_semi").select("url").distinct()
+        dropMeta(latestPerUrl(raw.join(urls, Seq("url"), "left_semi")))
+      }.getOrElse(noSigs)
 
-    // stored probes ONLY from the partitions of LSH buckets the dirty
-    // docs probe; liveness vs the narrow sig-batch clock; a changed doc's
-    // own stale probes drop via the dirty-id anti-join (its fresh rows
-    // ride deltaProbes)
-    val pbTouched = collectBuckets(deltaProbes, probeBucket(nB))
-    val dirtyBuckets = deltaProbes.select("channel", "bucket_key").distinct()
-    val livePrevProbes = resolvedProbes(spark, stateDir, before, Some(pbTouched))
-      .getOrElse(deltaProbes.limit(0))
-    val probeSub = livePrevProbes
-      .join(deltaIds, Seq("doc_id"), "left_anti")
-      .join(dirtyBuckets, Seq("channel", "bucket_key"), "left_semi")
-      .unionByName(deltaProbes.select("channel", "bucket_key", "doc_id", "tag"))
+    // stored probes ONLY from the partitions of the LSH buckets probed;
+    // liveness vs the narrow sig-batch clock
+    def probesIn(keys: DataFrame): DataFrame =
+      resolvedProbes(spark, stateDir, before, Some(collectBuckets(keys, probeBucket(nB))))
+        .getOrElse(noProbes)
 
-    // exact channel: live signature rows sharing a dirty content hash.
-    // The hash semi-join runs on the RAW narrow log first (urls sharing a
-    // dirty hash), then latest-per-url resolves only those urls' rows —
-    // the window shuffle is O(matching urls), the scan is column-pruned.
-    val dirtyHashes = deltaSigs.select("content_hash").distinct()
-    // empty fallback (not .get): a crash between the pages and signatures
-    // appends of a prior batch leaves a pages log without a signatures
-    // log — treat prev sigs as empty like prevSigsT/livePrevProbes do
-    val rawSigs = rawRead(spark, stateDir, "signatures", before)
-      .getOrElse(deltaSigs.limit(0).withColumn("_batch", lit(0L)))
-      .drop("_ub")
-    val hashUrls = rawSigs.join(dirtyHashes, Seq("content_hash"), "left_semi")
-      .select("url").distinct()
-    val prevSigsForExact = dropMeta(latestPerUrl(
-        rawSigs.join(hashUrls, Seq("url"), "left_semi")))
-      .join(deltaIds, Seq("doc_id"), "left_anti")
-      .join(dirtyHashes, Seq("content_hash"), "left_semi")
-    val sigsForExact = prevSigsForExact.unionByName(deltaSigs)
+    // url bucket = pmod(doc_id, nB), derivable from the id without a url
+    // join. before = None: this batch's pages delta is already appended,
+    // so dirty docs resolve to their new text.
+    def pagesOf(ids: DataFrame): DataFrame =
+      rawRead(spark, stateDir, "pages", None,
+        Some(collectBuckets(ids, pmod(col("doc_id"), lit(nB.toLong)).cast("int"))))
+        .map(d => dropMeta(latestPerUrl(d))).getOrElse(b.limit(0))
 
-    val (deltaPairs0, dropped) =
-      DedupStages.candidatesFromProbes(probeSub, sigsForExact, cfg)
-    // tiny pair table, whole candidate-generation plan behind it: pin it
-    // so its consumers (bucket collect, verify's two sides) don't re-run
-    // candidate generation
-    val deltaPairs = deltaPairs0.cache()
-
-    // verify side: page text ONLY from the url buckets of pair
-    // participants (bucket = pmod(doc_id, nB), derivable from the id
-    // without a url join). before=None: this batch's pages delta is
-    // already appended, so dirty participants resolve to their new text.
-    val partBuckets = collectBuckets(
-      deltaPairs.select(explode(array(col("id_a"), col("id_b"))).as("id")),
-      pmod(col("id"), lit(nB.toLong)).cast("int"))
-    val partPages = rawRead(spark, stateDir, "pages", None, Some(partBuckets))
-      .map(d => dropMeta(latestPerUrl(d)))
-      .getOrElse(b.limit(0))
-    val pwSide = DedupStages.withIds(partPages)
-      .withColumn("content_hash", md5(col("text")))
-    val deltaVerified = DedupStages.verified(deltaPairs, pwSide, cfg)
-
-    // carry previous live pairs not touching a dirty url (upsert model:
-    // every non-dirty url survives, so anti-join the small dirty set
-    // instead of semi-joining the full live-url set twice)
-    val dirtyUrls = dirtyPages.select("url")
-    val carried = resolvedVerified(spark, stateDir, before)
-      .map(_.join(dirtyUrls.select(col("url").as("url_a")), Seq("url_a"), "left_anti")
-        .join(dirtyUrls.select(col("url").as("url_b")), Seq("url_b"), "left_anti"))
-      .getOrElse(deltaVerified.limit(0))
-
-    // PINNED: consumed by connected components, the merge join, and the
-    // caller reading Result.verifiedPairs. The fold dedupes pairs the
-    // delta pass rediscovered between unchanged docs in a dirty bucket.
-    val verifiedAll = DedupStages.foldVerified(carried, deltaVerified).cache()
-
-    val clusters = DedupStages.clusters(verifiedAll).cache()
-    // merge fold: page text only from cluster members' url buckets
-    val memberBuckets = collectBuckets(clusters, urlBucket(nB))
-    val memberPages = rawRead(spark, stateDir, "pages", None, Some(memberBuckets))
-      .map(d => dropMeta(latestPerUrl(d)))
-      .getOrElse(b.limit(0))
-    val merged = DedupStages.mergedClusters(clusters, memberPages)
-
-    // full views for the Result are LAZY unions over the whole log — the
-    // per-batch work above never materializes them
-    val sigsAll = resolvedSignatures(spark, stateDir, before)
-      .map(_.join(deltaIds, Seq("doc_id"), "left_anti").unionByName(deltaSigs))
-      .getOrElse(deltaSigs)
-    val probesAll = resolvedProbes(spark, stateDir, before)
-      .map(_.join(deltaIds, Seq("doc_id"), "left_anti")
-        .unionByName(deltaProbes.select("channel", "bucket_key", "doc_id", "tag")))
-      .getOrElse(deltaProbes.select("channel", "bucket_key", "doc_id", "tag"))
-
-    (IncrementalDedup.DeltaResult(
-      DedupPipeline.Result(sigsAll, probesAll, deltaPairs, dropped, verifiedAll,
-        clusters, merged),
-      deltaSignatures = deltaSigs,
-      deltaProbes = deltaProbes.select("channel", "bucket_key", "doc_id", "tag"),
-      deltaVerified = deltaVerified),
-      // per-batch cache pins, released by processBatch after the output
-      // commits — without this a long-running stream accumulates cached
-      // plans/blocks in the CacheManager without bound
-      Seq(deltaSigs, deltaProbes, deltaPairs, verifiedAll, clusters))
+    def verifiedPairs: DataFrame = resolvedVerified(spark, stateDir, before).getOrElse(
+      spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL("url_a STRING, " +
+        "url_b STRING, channels ARRAY<STRING>, n_inter BIGINT, n_union BIGINT, " +
+        "n_min BIGINT, jaccard DOUBLE, containment DOUBLE")))
+    def signatures: DataFrame = resolvedSignatures(spark, stateDir, before).getOrElse(noSigs)
+    def probes: DataFrame = resolvedProbes(spark, stateDir, before).getOrElse(noProbes)
   }
 
   /** Fold one upsert batch into the persisted state; returns the new
@@ -397,28 +314,25 @@ object StreamingDedup {
     DeltaLog.append(b.withColumn("_ub", urlBucket(nB)), stateDir, "pages", bid,
       partitionCols = Seq("_ub"))
 
-    val (result, pins) =
+    val (d, pins) =
       if (!havePrev) {
         // cold start: the whole batch is the delta
         val r = DedupPipeline.run(spark, b, cfg)
-        DeltaLog.append(r.signatures.withColumn("_ub", urlBucket(nB)),
-          stateDir, "signatures", bid, partitionCols = Seq("_ub"))
-        DeltaLog.append(r.probes.withColumn("_ub", probeBucket(nB)),
-          stateDir, "probes", bid, partitionCols = Seq("_ub"))
-        DeltaLog.append(r.verifiedPairs.withColumn("_ub", pairBucket(nB)),
-          stateDir, "verified_pairs", bid, partitionCols = Seq("_ub"))
-        (r, Seq(r.signatures, r.verifiedPairs, r.candidatePairs))
+        (IncrementalDedup.DeltaResult(r, r.signatures, r.probes, r.verifiedPairs),
+          Seq(r.signatures, r.verifiedPairs, r.candidatePairs))
       } else {
-        val (d, p) = upsertDelta(spark, b, stateDir, cfg, bid, nB)
-        // O(dirty) state writes: ONLY this pass's increments are appended
-        DeltaLog.append(d.deltaSignatures.withColumn("_ub", urlBucket(nB)),
-          stateDir, "signatures", bid, partitionCols = Seq("_ub"))
-        DeltaLog.append(d.deltaProbes.withColumn("_ub", probeBucket(nB)),
-          stateDir, "probes", bid, partitionCols = Seq("_ub"))
-        DeltaLog.append(d.deltaVerified.withColumn("_ub", pairBucket(nB)),
-          stateDir, "verified_pairs", bid, partitionCols = Seq("_ub"))
-        (d.full, p)
+        // the upsert model: a batch removes no url
+        IncrementalDedup.pass(b, b.select("url").limit(0),
+          new LogReader(b, stateDir, cfg, bid, nB), cfg)
       }
+    // O(dirty) state writes: ONLY this pass's increments are appended
+    DeltaLog.append(d.deltaSignatures.withColumn("_ub", urlBucket(nB)),
+      stateDir, "signatures", bid, partitionCols = Seq("_ub"))
+    DeltaLog.append(d.deltaProbes.withColumn("_ub", probeBucket(nB)),
+      stateDir, "probes", bid, partitionCols = Seq("_ub"))
+    DeltaLog.append(d.deltaVerified.withColumn("_ub", pairBucket(nB)),
+      stateDir, "verified_pairs", bid, partitionCols = Seq("_ub"))
+    val result = d.full
 
     // derived outputs: full commits, bounded by the duplicate population
     val fp = s"batch-$bid"
@@ -458,7 +372,9 @@ object StreamingDedup {
 
     // release this batch's cache pins: outputs are committed, and the
     // returned Result reads resolved views from the log (candidatePairs /
-    // droppedBuckets recompute lazily if a caller consumes them)
+    // droppedBuckets recompute lazily if a caller consumes them). Without
+    // this a long-running stream accumulates cached plans/blocks in the
+    // CacheManager without bound.
     pins.foreach(_.unpersist())
 
     DedupPipeline.Result(
