@@ -17,10 +17,13 @@ import org.apache.spark.sql.functions._
  *
  * Layout: `root/<table>/d<batchId>` (append) or `root/<table>/c<batchId>`
  * (compaction), plus `root/<table>.deltas.json` listing live directories.
- * Crash safety mirrors TableIO: data directory first, manifest (temp file
- * + atomic move) last — a crash leaves an orphan dir the manifest never
- * references. Re-delivery of the same batchId (at-least-once streaming)
- * overwrites its own directory and manifest entry: idempotent.
+ * Each append or compaction is one StorageFormat write (its row count
+ * is the manifest's `rows`). Crash safety mirrors TableIO: data directory
+ * first (a `.tmp-*` dir, then renamed), manifest (temp file + atomic
+ * move) last — a crash leaves an orphan dir the manifest never references,
+ * and the next write of the table deletes leftover temp dirs. Re-delivery
+ * of the same batchId (at-least-once streaming) overwrites its own
+ * directory and manifest entry: idempotent.
  */
 object DeltaLog {
 
@@ -79,7 +82,7 @@ object DeltaLog {
       batchId = upToBatch, replace = Nil, partitionCols = partitionCols)
     // old dirs are unreferenced now; best-effort cleanup
     old.filterNot(_.dir == s"c$upToBatch")
-      .foreach(e => deleteRecursive(Paths.get(root, table, e.dir)))
+      .foreach(e => StorageFormat.delete(Paths.get(root, table, e.dir)))
     rows
   }
 
@@ -89,38 +92,12 @@ object DeltaLog {
                          partitionCols: Seq[String] = Nil): Long = {
     val tableDir = Paths.get(root, table)
     Files.createDirectories(tableDir)
-    val tmp = Paths.get(root, table, s".tmp-${java.util.UUID.randomUUID}")
-    val rows =
-      if (partitionCols.isEmpty) {
-        StorageFormat.write(df, tmp.toString, Nil)
-        StorageFormat.read(df.sparkSession, tmp.toString).count()
-      } else {
-        // Partitioned appends stage FLAT first, so the (possibly
-        // expensive, often uncached) delta plan is evaluated exactly ONCE
-        // — the previous empty-delta guard ran `df.isEmpty` as a second
-        // full plan execution on every partitioned append. The staged
-        // files also solve the empty case: a PARTITIONED write of an
-        // empty frame produces no part files at all and the read-back
-        // throws UNABLE_TO_INFER_SCHEMA (verified on Spark 4.1.2), while
-        // the FLAT empty stage keeps a schema-bearing part file whose
-        // partition columns stay data columns — unioning cleanly with
-        // partitioned sibling deltas. Zero-dirty micro-batches (pure
-        // redeliveries, unchanged re-crawls) hit that path. Non-empty
-        // stages are re-laid-out partitioned from the staged FILES (a
-        // column-pruned local read), never from the plan.
-        val stage = Paths.get(root, table, s".stage-${java.util.UUID.randomUUID}")
-        StorageFormat.write(df, stage.toString, Nil)
-        val staged = StorageFormat.read(df.sparkSession, stage.toString)
-        val n = staged.count()
-        if (n == 0L) Files.move(stage, tmp, StandardCopyOption.ATOMIC_MOVE)
-        else {
-          StorageFormat.write(staged, tmp.toString, partitionCols)
-          deleteRecursive(stage)
-        }
-        n
-      }
+    // temp dirs of writes that crashed before their rename
+    StorageFormat.sweep(tableDir, ".")
+    val tmp = tableDir.resolve(s".tmp-${java.util.UUID.randomUUID}")
+    val rows = StorageFormat.write(df, tmp.toString, partitionCols)
     val dst = tableDir.resolve(dirName)
-    deleteRecursive(dst)
+    StorageFormat.delete(dst)
     Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
     writeManifest(root, table, replace :+ Entry(dirName, rows, batchId))
     rows
@@ -147,10 +124,4 @@ object DeltaLog {
   /** Manifest entries of the single compacted baseline dir (empty before
     * the first compaction). */
   def isCompacted(e: Entry): Boolean = e.dir.startsWith("c")
-
-  private def deleteRecursive(p: Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    }
 }

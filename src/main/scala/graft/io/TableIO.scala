@@ -18,8 +18,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * on re-run when configHash + inputFingerprint still match — which makes
  * any run resumable mid-pipeline. No Iceberg runtime jar ships in this
  * sandbox (offline resolver), so the backing store is Parquet; swapping
- * in `iceberg-spark-runtime` replaces only this file's read/write calls,
- * not the pipeline above it.
+ * in `iceberg-spark-runtime` replaces only StorageFormat's read/write
+ * calls, not the pipeline above it.
  */
 object TableIO {
 
@@ -71,30 +71,30 @@ object TableIO {
       m.configHash == configHash && m.inputFingerprint == inputFingerprint &&
         Files.exists(dataDir(root, stage)))
 
-  /** Commit a stage: write to `<stage>.tmp`, atomically rename to
+  /** Commit a stage: write to `<stage>.tmp-*`, atomically rename to
     * `<stage>`, then write the manifest (rename-then-manifest ordering
     * means a crash can leave data without manifest = stage not committed,
     * never the reverse — at-least-once, like the reference's
-    * watermark-before-pass protocol, classes/SolrUpdater.php:292-302). */
+    * watermark-before-pass protocol, classes/SolrUpdater.php:292-302).
+    * The manifest's row count comes from the write; the next commit of
+    * the stage deletes the temp dirs of commits that crashed. */
   def commit(df: DataFrame, root: String, stage: String, configHash: String,
              inputFingerprint: String): DataFrame = {
-    val spark = df.sparkSession
+    StorageFormat.sweep(Paths.get(root), s"$stage.tmp-")
     val tmp = Paths.get(root, s"$stage.tmp-${java.util.UUID.randomUUID}")
     val dst = dataDir(root, stage)
-    StorageFormat.write(df, tmp.toString)
+    val rows = StorageFormat.write(df, tmp.toString)
     // Invalidate the OLD manifest before touching the data dir: a crash
     // anywhere between here and writeManifest can then only yield
     // data-without-manifest (= uncommitted, recomputed on resume), never
     // new data under a stale-but-matching manifest.
     Files.deleteIfExists(manifestPath(root, stage))
-    deleteRecursive(dst)
+    StorageFormat.delete(dst)
     Files.createDirectories(dst.getParent)
     Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-    val back = StorageFormat.read(spark, dst.toString)
-    val rows = back.count()
     writeManifest(root, Manifest(stage, configHash, inputFingerprint, rows,
       snapshotId = s"$stage-$configHash-$inputFingerprint"))
-    back
+    read(df.sparkSession, root, stage)
   }
 
   def read(spark: SparkSession, root: String, stage: String): DataFrame =
@@ -109,11 +109,4 @@ object TableIO {
         if (isCurrent(r, stageName, configHash, inputFingerprint)) read(spark, r, stageName)
         else commit(compute, r, stageName, configHash, inputFingerprint)
     }
-
-  private def deleteRecursive(p: Path): Unit = {
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    }
-  }
 }

@@ -122,15 +122,16 @@ object IncrementalDedup {
     // driver-side max-id action is needed.
     val deltaPw = DedupStages.withIds(dirtyPages)
     // O(dirty) rows behind the whole dirty-detection + signature plan,
-    // consumed by the exact channel, the full view and a delta-log
-    // append: pin
+    // consumed by the gone sets, the exact channel, the full view and a
+    // delta-log append: pin
     val deltaSigs = DedupStages.leanSignatures(deltaPw, cfg).cache()
     // O(dirty) rows, consumed by a bucket read, dirtyBuckets, probeSub,
     // the full view and a delta-log append: pin
     val deltaProbes = DedupStages.probeRows(deltaPw, cfg).cache()
     // docs whose previous rows are stale: the dirty and the removed ones
-    val goneUrls = dirtyPages.select("url").unionByName(removed.select("url"))
-    val goneIds = deltaPw.select("doc_id")
+    // (the dirty ones read off the pin, so the dirty-set plan runs once)
+    val goneUrls = deltaSigs.select("url").unionByName(removed.select("url"))
+    val goneIds = deltaSigs.select("doc_id")
       .unionByName(removed.select(xxhash64(col("url")).as("doc_id")))
 
     // candidate regeneration only in buckets touching a dirty doc: the

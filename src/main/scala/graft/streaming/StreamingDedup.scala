@@ -23,7 +23,9 @@ import graft.pipeline.{DedupConfig, DedupPipeline, DedupStages, IncrementalDedup
  * state tables — pages, signatures, probes, verified_pairs — are
  * APPEND-ONLY delta logs (graft.io.DeltaLog); each batch appends only its
  * upserts / dirty-doc signatures / dirty-doc probes / newly-verified
- * pairs, all batch-stamped. Readers resolve:
+ * pairs, all batch-stamped. Each append is one Spark job, and opening a
+ * delta runs none (graft.io.StorageFormat takes the row count from the
+ * write and stores the schema beside the files). Readers resolve:
  *
  *   pages, signatures  — latest `_batch` per url wins
  *   probes             — a probe row is live iff its `_batch` equals its
@@ -371,10 +373,11 @@ object StreamingDedup {
     }
 
     // release this batch's cache pins: outputs are committed, and the
-    // returned Result reads resolved views from the log (candidatePairs /
-    // droppedBuckets recompute lazily if a caller consumes them). Without
-    // this a long-running stream accumulates cached plans/blocks in the
-    // CacheManager without bound.
+    // returned Result reads lazy resolved views from the log, which open
+    // without running a job (candidatePairs / droppedBuckets recompute
+    // lazily if a caller consumes them). Without this a long-running
+    // stream accumulates cached plans/blocks in the CacheManager without
+    // bound.
     pins.foreach(_.unpersist())
 
     DedupPipeline.Result(
