@@ -155,7 +155,7 @@ object Profile {
       DedupStages.probeRows(pw, cfg), sigs, cfg)
     val candC = cand.cache()
     t("candidates") { candC.count() }
-    val verSide = sigs.select("doc_id", "url", "source", "lang")
+    val verSide = sigs.select("doc_id", "url", "source", "lang", "content_hash")
       .join(pw.select("doc_id", "text"), "doc_id")
     val ver = DedupStages.verified(candC, verSide, cfg).cache()
     t("verified") { ver.count() }

@@ -63,8 +63,9 @@ object DeltaLog {
     * `partitionCols` (e.g. a url-hash `_ub` bucket the caller attached)
     * directory-partitions the delta, so readers filtering on those columns
     * get parquet partition pruning — the mechanism behind StreamingDedup's
-    * touched-bucket-only per-batch state reads. The same columns must be
-    * used for every delta of a table (mixed layouts won't union). */
+    * touched-bucket-only per-batch state reads. Readers union deltas by
+    * column name and fill a column a delta lacks with nulls, so a table
+    * whose layout changed (a partition column dropped) still reads. */
   def append(df: DataFrame, root: String, table: String, batchId: Long,
              partitionCols: Seq[String] = Nil): Long =
     writeDelta(df.withColumn("_batch", lit(batchId)), root, table,
@@ -74,8 +75,7 @@ object DeltaLog {
 
   /** Replace the whole log with `resolved` (which must RETAIN each row's
     * original `_batch` stamp — liveness joins depend on it). */
-  def compact(spark: SparkSession, root: String, table: String,
-              resolved: DataFrame, upToBatch: Long,
+  def compact(root: String, table: String, resolved: DataFrame, upToBatch: Long,
               partitionCols: Seq[String] = Nil): Long = {
     val old = list(root, table)
     val rows = writeDelta(resolved, root, table, dirName = s"c$upToBatch",
@@ -108,8 +108,9 @@ object DeltaLog {
   def read(spark: SparkSession, root: String, table: String): Option[DataFrame] =
     readWhere(spark, root, table, _ => true)
 
-  /** Union of the committed deltas whose manifest entry passes `keep`
-    * (None if none match) — readers that resolve the compacted baseline
+  /** Union by column name of the committed deltas whose manifest entry
+    * passes `keep` (None if none match); a column missing from some deltas
+    * reads as null in their rows. Readers that resolve the compacted baseline
     * (`c…` dir) and the post-compaction appends (`d…` dirs) differently
     * select each side without scanning the other. */
   def readWhere(spark: SparkSession, root: String, table: String,
@@ -118,7 +119,7 @@ object DeltaLog {
     if (entries.isEmpty) None
     else Some(entries
       .map(e => StorageFormat.read(spark, Paths.get(root, table, e.dir).toString))
-      .reduce(_ unionByName _))
+      .reduce(_.unionByName(_, allowMissingColumns = true)))
   }
 
   /** Manifest entries of the single compacted baseline dir (empty before

@@ -36,32 +36,31 @@ import graft.pipeline.{DedupConfig, DedupPipeline, DedupStages, IncrementalDedup
  *                        rule of IncrementalDedup, evaluated at read);
  *                        duplicate emissions keep the latest
  *
- * READS are bucket-pruned (the round-3 O(corpus)-per-batch read fixed):
- * pages and signatures deltas are directory-partitioned by
- * `_ub = pmod(xxhash64(url), stateBuckets)`, probes by
- * `_ub = pmod(xxhash64(channel, bucket_key), stateBuckets)`, and
- * verified_pairs by the MIN-endpoint url bucket
- * `_ub = pmod(xxhash64(url_a), stateBuckets)` (url_a is the canonical min
- * — stable across re-emissions), so each batch resolves latest-per-url
- * only in the url buckets it TOUCHES, reads stored probes only in the
- * LSH-bucket partitions its dirty docs probe, reads page text only in
- * the url buckets of verify participants and cluster members, and
- * bucket-scoped pair consumers prune to their partitions. The per-batch
- * carried-pair view does need the FULL live pair population (each batch
- * commits full cluster output), but its resolution never shuffles the
- * compacted pair baseline: liveness splits at the compaction watermark
- * (see resolvedVerified) into broadcast anti-joins for the baseline and
- * a full join+window only over the (small) post-compaction pair deltas.
- * What still scans the full log per batch is narrow and column-pruned:
+ * Only the tables a reader prunes are bucketed. pages and signatures
+ * deltas are directory-partitioned by the url bucket
+ * `_ub = pmod(xxhash64(url), stateBuckets)`, so a batch resolves
+ * latest-per-url only in the url buckets it TOUCHES (`signaturesOf`) and
+ * reads page text only in the url buckets of verify participants and
+ * cluster members (`pagesOf`). probes and verified_pairs are written
+ * flat: a doc has ~44 probe keys, so even a few-doc batch probes nearly
+ * every hash partition of the probe log, and the carried-pair view needs
+ * the FULL live pair population (each batch commits full cluster
+ * output). The pair resolution still never shuffles the compacted pair
+ * baseline: liveness splits at the compaction watermark (see
+ * resolvedVerified) into broadcast anti-joins for the baseline and a
+ * full join+window only over the (small) post-compaction pair deltas.
+ * What else scans the full log per batch is narrow and column-pruned:
  * the (url, _batch) since-watermark re-sign scan and the content-hash
  * column behind the exact channel — fixed-width columns of the lean
  * signature log, never text.
  *
  * Every `compactEvery` batches the resolved views are rewritten as a
- * single delta (original `_batch` stamps AND bucket layout preserved —
- * liveness and pruning both depend on them), so reads stay
- * O(touched-bucket state + corpus/compactEvery·narrow) and the amortized
- * write cost per batch is O(batch + corpus/compactEvery).
+ * single delta (original `_batch` stamps and the url-bucket layout
+ * preserved — liveness and pruning depend on them), so the amortized
+ * write cost per batch is O(batch + corpus/compactEvery). State dirs
+ * whose probe and pair deltas were written partitioned by an earlier
+ * layout still read (deltas union by column name); their first
+ * compaction rewrites those two logs flat.
  *
  * Outputs per batch — clusters, merged_clusters — are full TableIO
  * commits: they are derived tables bounded by the duplicate population
@@ -78,8 +77,8 @@ object StreamingDedup {
 
   private val pageCols = Seq("url", "warc_ts", "html", "text", "lang", "source")
 
-  /** Default url-hash bucket count for the partitioned state layout. At
-    * 10¹² docs each of the 64 buckets holds ~1.6% of the state; a batch
+  /** Default url-hash bucket count for the pages and signatures layout.
+    * At 10¹² docs each of the 64 buckets holds ~1.6% of the state; a batch
     * touching k buckets reads k/64 of the page/signature logs. The value
     * must stay FIXED for the lifetime of a state dir (it defines the
     * directory layout). */
@@ -90,19 +89,6 @@ object StreamingDedup {
     * bucket is derivable from either column. */
   private def urlBucket(nB: Int): Column =
     pmod(xxhash64(col("url")), lit(nB.toLong)).cast("int")
-
-  /** probe-partition bucket: over the LSH bucket key, NOT the doc — a
-    * dirty doc's probes land in few LSH buckets, and those buckets'
-    * partitions are exactly what the candidate join needs to read. */
-  private def probeBucket(nB: Int): Column =
-    pmod(xxhash64(col("channel"), col("bucket_key")), lit(nB.toLong)).cast("int")
-
-  /** verified-pair bucket: the MIN endpoint's url bucket — url_a is the
-    * canonical (lexicographic min) endpoint, stable across re-emissions
-    * of a pair, so every emission lands in the same partition and
-    * bucket-scoped readers prune soundly. */
-  private def pairBucket(nB: Int): Column =
-    pmod(xxhash64(col("url_a")), lit(nB.toLong)).cast("int")
 
   /** Latest-batch-wins resolution per url. */
   private def latestPerUrl(df: DataFrame): DataFrame =
@@ -155,10 +141,9 @@ object StreamingDedup {
 
   /** Live probes: `_batch` must match the doc's latest signature batch. */
   def resolvedProbes(spark: SparkSession, stateDir: String,
-                     before: Option[Long] = None,
-                     buckets: Option[Seq[Int]] = None): Option[DataFrame] =
+                     before: Option[Long] = None): Option[DataFrame] =
     for {
-      probes <- rawRead(spark, stateDir, "probes", before, buckets)
+      probes <- rawRead(spark, stateDir, "probes", before)
       clock <- sigBatchByDoc(spark, stateDir, before)
     } yield probes.join(clock, Seq("doc_id"), "inner")
       .where(col("_batch") === col("_sig_batch"))
@@ -186,19 +171,12 @@ object StreamingDedup {
     * `_batch > vc` predicate — no corpus-wide groupBy/window. A dead
     * later emission implies a since-watermark re-sign of an endpoint, so
     * anti-joining the baseline on ALL post-compaction pair keys (not just
-    * live ones) cannot resurrect or lose a pair.
-    *
-    * `buckets` prunes both sides to the given min-endpoint url-hash `_ub`
-    * partitions — sound for bucket-scoped consumers because every
-    * emission of a pair carries the same `_ub` (url_a is the canonical
-    * min endpoint, stable across re-emissions). */
+    * live ones) cannot resurrect or lose a pair. */
   def resolvedVerified(spark: SparkSession, stateDir: String,
-                       before: Option[Long] = None,
-                       buckets: Option[Seq[Int]] = None): Option[DataFrame] = {
-    def flt(df: DataFrame): DataFrame = {
-      val b = before.fold(df)(x => df.where(col("_batch") < x))
-      buckets.fold(b)(bs => b.where(col("_ub").isin(bs: _*)))
-    }
+                       before: Option[Long] = None): Option[DataFrame] = {
+    // `_ub`: the bucket column of deltas written in the earlier partitioned layout
+    def flt(df: DataFrame): DataFrame =
+      before.fold(df)(x => df.where(col("_batch") < x)).drop("_ub")
     val comp = DeltaLog.readWhere(spark, stateDir, "verified_pairs",
       DeltaLog.isCompacted).map(flt)
     val delt = DeltaLog.readWhere(spark, stateDir, "verified_pairs",
@@ -231,7 +209,7 @@ object StreamingDedup {
         .where(col("_rnk") === 1).drop("_rnk")
     }
     Some((compLive.toSeq ++ deltLive.toSeq)
-      .reduce(_ unionByName _).drop("_batch", "_ub"))
+      .reduce(_ unionByName _).drop("_batch"))
   }
 
   /** Distinct bucket values of a (small) frame — the driver-side key to
@@ -241,10 +219,10 @@ object StreamingDedup {
 
   /** The delta logs as the incremental core's previous state. Reads are
     * of the state BEFORE batch `bid` — the redelivery guard, see rawRead —
-    * except page reads, and each prunes to the `_ub` partitions its keys
-    * fall in. A log that does not exist yet reads as empty: a crash
-    * between the pages append and the later appends of an earlier batch
-    * leaves a pages log without the others. */
+    * except page reads; `signaturesOf` and `pagesOf` prune to the url
+    * buckets their keys fall in. A log that does not exist yet reads as
+    * empty: a crash between the pages append and the later appends of an
+    * earlier batch leaves a pages log without the others. */
   private final class LogReader(b: DataFrame, stateDir: String, cfg: DedupConfig,
                                 bid: Long, nB: Int) extends IncrementalDedup.PrevReader {
     private val spark = b.sparkSession
@@ -267,11 +245,11 @@ object StreamingDedup {
         dropMeta(latestPerUrl(raw.join(urls, Seq("url"), "left_semi")))
       }.getOrElse(noSigs)
 
-    // stored probes ONLY from the partitions of the LSH buckets probed;
-    // liveness vs the narrow sig-batch clock
+    // the whole live probe view (the log is flat: a few docs' probe keys
+    // hit nearly every hash bucket); the core's semi-join on the keys
+    // restricts it
     def probesIn(keys: DataFrame): DataFrame =
-      resolvedProbes(spark, stateDir, before, Some(collectBuckets(keys, probeBucket(nB))))
-        .getOrElse(noProbes)
+      resolvedProbes(spark, stateDir, before).getOrElse(noProbes)
 
     // url bucket = pmod(doc_id, nB), derivable from the id without a url
     // join. before = None: this batch's pages delta is already appended,
@@ -330,10 +308,8 @@ object StreamingDedup {
     // O(dirty) state writes: ONLY this pass's increments are appended
     DeltaLog.append(d.deltaSignatures.withColumn("_ub", urlBucket(nB)),
       stateDir, "signatures", bid, partitionCols = Seq("_ub"))
-    DeltaLog.append(d.deltaProbes.withColumn("_ub", probeBucket(nB)),
-      stateDir, "probes", bid, partitionCols = Seq("_ub"))
-    DeltaLog.append(d.deltaVerified.withColumn("_ub", pairBucket(nB)),
-      stateDir, "verified_pairs", bid, partitionCols = Seq("_ub"))
+    DeltaLog.append(d.deltaProbes, stateDir, "probes", bid)
+    DeltaLog.append(d.deltaVerified, stateDir, "verified_pairs", bid)
     val result = d.full
 
     // derived outputs: full commits, bounded by the duplicate population
@@ -343,32 +319,31 @@ object StreamingDedup {
     val clu = TableIO.commit(result.clusters, stateDir, "clusters", ch, fp)
 
     // LSM-style compaction keeps the delta count bounded; the rewritten
-    // deltas preserve both `_batch` stamps (liveness) and `_ub` layout
-    // (pruning)
+    // deltas preserve the `_batch` stamps (liveness) and the pages and
+    // signatures `_ub` layout (pruning). Probes and pairs are rewritten
+    // flat, which drops the bucket column of an earlier partitioned layout
     if (compactEvery > 0 && DeltaLog.list(stateDir, "pages").size > compactEvery) {
-      DeltaLog.compact(spark, stateDir, "pages",
+      DeltaLog.compact(stateDir, "pages",
         latestPerUrl(DeltaLog.read(spark, stateDir, "pages").get), bid,
         partitionCols = Seq("_ub"))
       val sigsStamped = latestPerUrl(DeltaLog.read(spark, stateDir, "signatures").get)
         .localCheckpoint(true) // pin: consumed by probes + verified liveness
-      DeltaLog.compact(spark, stateDir, "signatures", sigsStamped, bid,
+      DeltaLog.compact(stateDir, "signatures", sigsStamped, bid,
         partitionCols = Seq("_ub"))
-      val probes = DeltaLog.read(spark, stateDir, "probes").get
+      val probes = DeltaLog.read(spark, stateDir, "probes").get.drop("_ub")
         .join(sigsStamped.select(col("doc_id"), col("_batch").as("_sig_batch")),
           Seq("doc_id"))
         .where(col("_batch") === col("_sig_batch")).drop("_sig_batch")
-      DeltaLog.compact(spark, stateDir, "probes", probes, bid,
-        partitionCols = Seq("_ub"))
+      DeltaLog.compact(stateDir, "probes", probes, bid)
       val sb = sigsStamped.select(col("url"), col("_batch").as("_sb"))
-      val ver = DeltaLog.read(spark, stateDir, "verified_pairs").get
+      val ver = DeltaLog.read(spark, stateDir, "verified_pairs").get.drop("_ub")
         .join(sb.select(col("url").as("url_a"), col("_sb").as("_sba")), Seq("url_a"))
         .join(sb.select(col("url").as("url_b"), col("_sb").as("_sbb")), Seq("url_b"))
         .where(col("_batch") >= col("_sba") && col("_batch") >= col("_sbb"))
         .withColumn("_rnk", row_number().over(
           Window.partitionBy("url_a", "url_b").orderBy(col("_batch").desc)))
         .where(col("_rnk") === 1).drop("_rnk", "_sba", "_sbb")
-      DeltaLog.compact(spark, stateDir, "verified_pairs", ver, bid,
-        partitionCols = Seq("_ub"))
+      DeltaLog.compact(stateDir, "verified_pairs", ver, bid)
       sigsStamped.unpersist()
     }
 

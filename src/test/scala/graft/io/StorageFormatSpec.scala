@@ -14,7 +14,7 @@ import graft.SparkTestSession
   * whose row count comes from the write itself, an open is none, an empty
   * partitioned delta still reads with its schema, temp dirs of crashed
   * writes are swept, and directories written without the schema sidecar
-  * (the earlier layout) still read. */
+  * or with bucketed probe and pair logs (earlier layouts) still read. */
 class StorageFormatSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -119,6 +119,17 @@ class StorageFormatSpec extends AnyFunSuite {
       .write.parquet(dir.toString)
   }
 
+  /** Rewrite the delta `dir` partitioned by `_ub = pmod(xxhash64(keys), 4)`:
+    * the layout of the probe and pair logs before they were written flat. */
+  private def bucketed(dir: Path, keys: String*): Unit = {
+    val tmp = dir.resolveSibling(s".ub-${dir.getFileName}")
+    StorageFormat.write(StorageFormat.read(spark, dir.toString)
+      .withColumn("_ub", pmod(xxhash64(keys.map(col): _*), lit(4L)).cast("int")),
+      tmp.toString, Seq("_ub"))
+    StorageFormat.delete(dir)
+    Files.move(tmp, dir)
+  }
+
   test("directories written without the schema sidecar still read and union") {
     val root = tmpDir("graft-seam-legacy")
     DeltaLog.append(rows(5), root, "t", 0L, Seq("_ub"))
@@ -152,6 +163,9 @@ class StorageFormatSpec extends AnyFunSuite {
       page("https://c.example.com/3", "a third page with entirely its own words and body", 0))
     StreamingDedup.processBatch(spark, df(v1), dir, cfg, batchId = 0L, compactEvery = 0,
       stateBuckets = 4)
+    // batch 0's probe and pair deltas in the earlier bucketed layout
+    bucketed(Paths.get(dir, "probes", "d0"), "channel", "bucket_key")
+    bucketed(Paths.get(dir, "verified_pairs", "d0"), "url_a")
     // the empty deltas of a zero-dirty batch 1, in the earlier flat layout
     for (t <- Seq("signatures", "probes", "verified_pairs")) {
       DeltaLog.append(DeltaLog.read(spark, dir, t).get.drop("_batch").limit(0), dir, t, 1L,
@@ -160,18 +174,31 @@ class StorageFormatSpec extends AnyFunSuite {
     }
     stripSidecars(dir)
 
+    def clusters(d: DataFrame) = d.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    def cold(ps: Seq[(String, java.sql.Timestamp, Array[Byte], String, String, String)]) =
+      clusters(DedupPipeline.run(spark, DedupStages.withSource(df(ps)), cfg).clusters)
+
     val batch = Seq(page("https://d.example.com/4", shared, 5),
       page("https://c.example.com/3", "a rewritten third page about other things now", 5))
     StreamingDedup.processBatch(spark, df(batch), dir, cfg, batchId = 2L, compactEvery = 0,
       stateBuckets = 4)
-    val got = TableIO.read(spark, dir, "clusters")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val snapshot = df(v1.filterNot(_._1 == "https://c.example.com/3") ++ batch)
-    val want = DedupPipeline.run(spark, DedupStages.withSource(snapshot), cfg).clusters
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(got == want)
+    val got = clusters(TableIO.read(spark, dir, "clusters"))
+    val snapshot = v1.filterNot(_._1 == "https://c.example.com/3") ++ batch
+    assert(got == cold(snapshot))
     assert(got.keySet == Set("https://a.example.com/1", "https://b.example.com/2",
       "https://d.example.com/4"))
     assert(StreamingDedup.resolvedSignatures(spark, dir).get.count() == 4)
+
+    // a compacting fold over the mixed bucketed / flat probe and pair logs
+    val batch3 = Seq(page("https://e.example.com/5", shared, 7))
+    StreamingDedup.processBatch(spark, df(batch3), dir, cfg, batchId = 3L, compactEvery = 1,
+      stateBuckets = 4)
+    assert(clusters(TableIO.read(spark, dir, "clusters")) == cold(snapshot ++ batch3))
+    for (t <- Seq("probes", "verified_pairs")) {
+      val Seq(c) = DeltaLog.list(dir, t)
+      assert(DeltaLog.isCompacted(c))
+      assert(!StorageFormat.read(spark, Paths.get(dir, t, c.dir).toString).columns
+        .contains("_ub"), s"compacted $t still carries _ub")
+    }
   }
 }

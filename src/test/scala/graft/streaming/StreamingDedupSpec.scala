@@ -80,9 +80,8 @@ class StreamingDedupSpec extends AnyFunSuite {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     val cfg = DedupConfig()
     // batch 1: 200 distinct-content docs spread across url buckets;
-    // batch 2: ONE new doc duplicating doc 7 — touches one url bucket
-    // and ~half the probe partitions (one doc's ~44 probe keys over 64
-    // partitions), so its reads must undercut the no-pruning layout
+    // batch 2: ONE new doc duplicating doc 7 — its reads must undercut
+    // the no-pruning layout of the same state
     val seed = (0 until 200).map(i => p(s"https://s$i.example.com/$i",
       s"unique page number $i body alpha$i beta$i gamma$i delta$i epsilon$i zeta$i eta$i theta$i"))
     val dup = Seq(p("https://dup.example.com/x",
@@ -119,14 +118,19 @@ class StreamingDedupSpec extends AnyFunSuite {
 
     val (readsPruned, cPruned) = run(64)
     val (readsFull, cFull) = run(1)
+    info(s"batch-2 records read: pruned=$readsPruned full=$readsFull")
     assert(cPruned == cFull, "bucket layout must not change the clusters")
     assert(cPruned.values.toSet.size == 1 && cPruned.keySet ==
       Set("https://s7.example.com/7", "https://dup.example.com/x"))
-    // the batch touches 1 of 64 url buckets and ~half the probe
-    // partitions: the pruned run must read meaningfully fewer rows than
-    // the single-bucket (no-pruning) layout of the SAME state
-    assert(readsPruned < readsFull * 7 / 10,
-      s"expected bucket pruning to cut batch-2 reads: pruned=$readsPruned full=$readsFull")
+    // the url-bucketed reads: signaturesOf the batch url (1 bucket) and
+    // pagesOf the verify participants and the cluster members (dup and
+    // doc 7: at most 2 buckets each), so the batch touches at most 3 of
+    // 64 url buckets. Each of the three reads then skips ~190 of the
+    // state's 200 rows that the single-bucket layout reads; every other
+    // read (probes, pairs, the narrow signature scans) is the same in
+    // both runs. So pruning must save at least 400 records
+    assert(readsFull - readsPruned >= 400,
+      s"expected url-bucket pruning to cut batch-2 reads: pruned=$readsPruned full=$readsFull")
   }
 
   test("zero-dirty micro-batch (unchanged re-crawl / redelivery) is a safe no-op") {
@@ -181,10 +185,8 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(got == want, s"got $got want $want")
   }
 
-  test("verified_pairs log: split liveness at the compaction watermark, bucket-scoped reads prune physically") {
+  test("verified_pairs log: split liveness at the compaction watermark") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     val stateDir = java.nio.file.Files.createTempDirectory("graft-stream-vp").toString
     val cfg = DedupConfig()
     def pair(i: Int, ts: Long): Seq[P] = {
@@ -219,42 +221,6 @@ class StreamingDedupSpec extends AnyFunSuite {
       (s"https://h$i.example.com/a$i", s"https://h$i.example.com/b$i"))).toSet
     assert(full == expected,
       s"missing=${(expected -- full).take(3)} extra=${(full -- expected).take(3)}")
-
-    // bucket-scoped read == full view filtered to that bucket (soundness)
-    def bucketOf(url: String): Int = spark.range(1)
-      .select(pmod(xxhash64(lit(url)), lit(64L)).cast("int")).head().getInt(0)
-    val b2 = bucketOf("https://h2.example.com/a2")
-    val pruned = pairsOf(
-      StreamingDedup.resolvedVerified(spark, stateDir, buckets = Some(Seq(b2))).get)
-    assert(pruned == full.filter(x => bucketOf(x._1) == b2))
-    assert(pruned.contains(("https://h2.example.com/a2", "https://h2.example.com/b2")))
-
-    // physical pruning: materializing the one-bucket view reads fewer
-    // records off disk than the full view (same state, same session)
-    def recordsRead(f: => Unit): Long = {
-      val acc = new java.util.concurrent.atomic.AtomicLong
-      val l = new SparkListener {
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-          acc.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        f
-        var last = -1L; var stable = 0
-        while (stable < 3) {
-          Thread.sleep(200)
-          val now = acc.get
-          if (now == last) stable += 1 else { stable = 0; last = now }
-        }
-      } finally spark.sparkContext.removeSparkListener(l)
-      acc.get
-    }
-    val readsFull = recordsRead(
-      StreamingDedup.resolvedVerified(spark, stateDir).get.count(): Unit)
-    val readsPruned = recordsRead(StreamingDedup.resolvedVerified(
-      spark, stateDir, buckets = Some(Seq(b2))).get.count(): Unit)
-    assert(readsPruned < readsFull,
-      s"bucket-scoped pair read must prune: pruned=$readsPruned full=$readsFull")
   }
 
   /** One prior state and one insert / update / delete batch (a delete is
@@ -324,9 +290,10 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(fe.compacted, "fixture must start from a compacted state")
     info(s"upsert batch jobs: ${fe.jobs}")
     // 169 when this spec was introduced; 95 once writes counted their own
-    // rows, opens read a stored schema and the dirty set ran once (the
+    // rows, opens read a stored schema and the dirty set ran once; 94 once
+    // the probe log was written flat and its bucket collect went (each the
     // same in two runs). Lower it when a change removes jobs, never raise it
-    val bound = 95
+    val bound = 94
     assert(fe.jobs <= bound, s"upsert batch ran ${fe.jobs} Spark jobs, bound $bound")
   }
 
