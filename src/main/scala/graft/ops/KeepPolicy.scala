@@ -17,15 +17,12 @@ import org.apache.spark.sql.functions._
   * Argmax WITHOUT a windowed sort: `row_number() over (partition by
   * cluster)` serializes each cluster's members through one task's sort —
   * a boilerplate mega-cluster (10^6 copies of a cookie banner) becomes a
-  * straggler. The TWO AGGREGATIONS (max score per cluster, then min id
-  * among the maxima) are map-side-combinable, so hot clusters stay
-  * partial-aggregated in every scan task; ties are broken by id so the
-  * survivor set is total-order deterministic on any cluster size.
-  * Caveat (round-5 advice): the `clustered ⋈ bestScore` equi-join between
-  * the two aggregations still routes all max-score TIES of a mega-cluster
-  * (identical docs tie) through one task whenever `bestScore` exceeds the
-  * broadcast threshold — salt that join (or pre-filter argmax candidates
-  * map-side) if score-tied mega-clusters ever dominate a corpus.
+  * straggler. The TWO AGGREGATIONS (min id per (cluster, score), then
+  * the max (score, id) struct per cluster) are map-side-combinable, so
+  * hot clusters stay partial-aggregated in every scan task — the score
+  * ties of a mega-cluster (identical docs tie) collapse in the partial
+  * aggregation; ties are broken by id so the survivor set is total-order
+  * deterministic on any cluster size.
   *
   * Scale shape: `clusters` holds only dup-cluster MEMBERS (≪ corpus);
   * both aggs run on that table, never on the full corpus, and the final
@@ -49,16 +46,18 @@ object KeepPolicy {
     * covering dup-cluster members only. Output: idCol,
     * cluster_id (own id for unclustered docs — every doc is its own
     * singleton cluster), kept (1 = survives dedup, 0 = dropped duplicate).
-    * Exactly one kept=1 per cluster: max score, min id among ties. */
+    * Exactly one kept=1 per cluster: max score, min id among ties; a
+    * cluster whose every score is null keeps none. */
   def survivors(docs: DataFrame, clusters: DataFrame, score: Column,
                 idCol: String = "url"): DataFrame = {
     val scored = docs.select(col(idCol), score.as("__score"))
     val members = scored.join(clusters, Seq(idCol), "left")
-    val clustered = members.where(col("cluster_id").isNotNull)
-    val bestScore = clustered.groupBy("cluster_id")
-      .agg(max("__score").as("__score"))
-    val keeper = clustered.join(bestScore, Seq("cluster_id", "__score"))
-      .groupBy("cluster_id").agg(min(idCol).as("__keep_id"))
+    // one id per (cluster, score) first, so the struct max below picks
+    // the min id among the max-score members
+    val keeper = members.where(col("cluster_id").isNotNull && col("__score").isNotNull)
+      .groupBy("cluster_id", "__score").agg(min(idCol).as("__id"))
+      .groupBy("cluster_id").agg(max(struct(col("__score"), col("__id")))
+        .getField("__id").as("__keep_id"))
     members.join(keeper, Seq("cluster_id"), "left")
       .select(col(idCol),
         coalesce(col("cluster_id"), col(idCol)).as("cluster_id"),

@@ -1,43 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
  * Multimodal-column plumbing: media payloads ride as opaque `binary`
  * columns with typed metadata beside them (the reference stores its blobs
  * the same way — `original_data` as BinData, classes/RecordManager.php:
- * 1102-1107). The Spark-side contract (schema, partition-friendly batch
- * shape, typed decode signature) is real and tested; the codec itself is
- * a clearly-marked deterministic STUB because no image/audio libraries
- * ship in this container.
+ * 1102-1107). No image/audio codec ships with the project, so the payload
+ * is never decoded: only its length and magic bytes are exposed.
  */
 object Multimodal {
-
-  /** Typed metadata extracted from a binary payload. */
-  final case class MediaMeta(
-      url: String,
-      byteLength: Long,
-      magicHex: String,
-      kind: String)
-
-  /** Decoded "features" — STUB: a real deployment replaces `decodeStub`
-    * with an image/audio codec (e.g. via mapInPandas on a Python cluster
-    * or a JNI codec here); everything around it keeps working unchanged. */
-  final case class MediaFeatures(
-      url: String,
-      byteLength: Long,
-      featureHash: Long,
-      width: Int,
-      height: Int)
-
-  private def sniffKind(magic: Array[Byte]): String = {
-    val hex = magic.take(4).map("%02x".format(_)).mkString
-    if (hex.startsWith("89504e47")) "png"
-    else if (hex.startsWith("ffd8")) "jpeg"
-    else if (hex.startsWith("3c68746d") || hex.startsWith("3c21646f")) "html"
-    else "bin"
-  }
 
   /** Column-level metadata extraction (codegen'd built-ins only). */
   def mediaMeta(pages: DataFrame, binCol: String = "html"): DataFrame =
@@ -45,28 +18,4 @@ object Multimodal {
       col("url"),
       length(col(binCol)).cast("long").as("byte_length"),
       lower(hex(substring(col(binCol), 1, 4))).as("magic_hex"))
-
-  /** DETERMINISTIC STUB decode: derives fake-but-stable "features" from
-    * the payload bytes so partitioning/batching behavior is testable.
-    * Marked clearly; swap the body for a real codec. */
-  def decodeStub(url: String, payload: Array[Byte]): MediaFeatures = {
-    var h = 0x2545F4914F6CDD1DL
-    var i = 0
-    while (i < payload.length) {
-      h = (h ^ (payload(i) & 0xFFL)) * 0x100000001B3L
-      i += math.max(1, payload.length / 64) // sample ≤64 bytes: bounded work per row
-    }
-    MediaFeatures(url, payload.length.toLong, h,
-      width = ((h & 0x3FF) + 1).toInt, height = (((h >>> 10) & 0x3FF) + 1).toInt)
-  }
-
-  /** Typed decode pass: one deserialization boundary (`as[(String,
-    * Array[Byte])]` → map), executed per-partition with no driver
-    * collection; the partitioning of the input carries through. */
-  def decodeFeatures(spark: SparkSession, pages: DataFrame,
-                     binCol: String = "html"): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    pages.select(col("url"), col(binCol)).as[(String, Array[Byte])]
-      .map { case (url, payload) => decodeStub(url, payload) }
-  }
 }

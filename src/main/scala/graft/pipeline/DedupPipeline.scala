@@ -73,6 +73,11 @@ final case class DedupConfig(
   // a full clique of n members is n(n-1)/2 pairs in one array
   // (graft.functions.SortedCliquePairs): 65535 is the largest n that fits
   require(bucketCap <= 65535, s"bucketCap must be <= 65535, got $bucketCap")
+  // ProbeRowsFor emits four 16-bit SimHash chunks: by pigeonhole, two
+  // hashes within Hamming 3 share a chunk, so the probe is complete only
+  // up to 3
+  require(simhashMaxHamming <= 3,
+    s"simhashMaxHamming must be <= 3 (four 16-bit probe chunks), got $simhashMaxHamming")
 
   /** Stable config fingerprint for checkpoint reuse (the reference keys
     * its memoized worklists on md5 of the query params,

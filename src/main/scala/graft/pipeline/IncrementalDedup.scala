@@ -9,7 +9,9 @@ import org.apache.spark.sql.functions._
  * a small `PrevReader` supplies the previous state. Two readers exist:
  * the in-memory `PrevState` of a previous `DedupPipeline.run` (here, used
  * by `run`/`runDelta`) and the bucket-pruned delta logs of
- * graft.streaming.StreamingDedup. The rules:
+ * graft.streaming.StreamingDedup, which folds every streaming batch through
+ * this core, the first one of a state dir included (its logs read as
+ * empty, so every doc is dirty). The rules:
  *
  *  - content-hash short-circuit: rows whose (url, md5(text)) is unchanged
  *    keep their previous signatures, no recompute
@@ -64,15 +66,15 @@ object IncrementalDedup {
     def signaturesOf(urls: DataFrame): DataFrame
     /** latest signature rows, at least those whose content_hash is in `hashes` */
     def signaturesSharing(hashes: DataFrame): DataFrame
-    /** live probe rows, at least those in the (channel, bucket_key) buckets of `keys` */
-    def probesIn(keys: DataFrame): DataFrame
     /** page rows of the NEW state (the upserts included), at least those
       * of the doc ids in `ids` */
     def pagesOf(ids: DataFrame): DataFrame
     /** live verified pairs */
     def verifiedPairs: DataFrame
-    /** the whole signature and probe views, read lazily for the Result */
+    /** the whole signature view, read lazily for the Result */
     def signatures: DataFrame
+    /** the whole live probe view: the core restricts it to the dirty
+      * buckets, and the Result reads it lazily */
     def probes: DataFrame
   }
 
@@ -80,7 +82,6 @@ object IncrementalDedup {
   private final class InMemory(prev: PrevState, pages: DataFrame) extends PrevReader {
     def signaturesOf(urls: DataFrame): DataFrame = prev.signatures
     def signaturesSharing(hashes: DataFrame): DataFrame = prev.signatures
-    def probesIn(keys: DataFrame): DataFrame = prev.probes
     def pagesOf(ids: DataFrame): DataFrame = pages
     def verifiedPairs: DataFrame = prev.verifiedPairs
     def signatures: DataFrame = prev.signatures
@@ -138,7 +139,7 @@ object IncrementalDedup {
     // stored live probes of those buckets (a gone doc's stale rows drop)
     // plus the fresh dirty-doc probes
     val dirtyBuckets = deltaProbes.select("channel", "bucket_key").distinct()
-    val probeSub = prev.probesIn(deltaProbes.select("channel", "bucket_key"))
+    val probeSub = prev.probes
       .join(goneIds, Seq("doc_id"), "left_anti")
       .join(dirtyBuckets, Seq("channel", "bucket_key"), "left_semi")
       .unionByName(deltaProbes)

@@ -16,7 +16,10 @@ import graft.pipeline.{DedupConfig, DedupPipeline, DedupStages, IncrementalDedup
  * UPSERT set (url = key, latest wins); `foreachBatch` folds it into the
  * persisted state with the incremental core, IncrementalDedup.pass, which
  * reads the previous state through this object's delta-log `LogReader`
- * (the in-memory `PrevState` is the core's other reader).
+ * (the in-memory `PrevState` is the core's other reader). The first batch
+ * of a state dir folds the same way: a log that does not exist yet reads
+ * as empty, so every doc of that batch is dirty and there is no separate
+ * cold-start path.
  *
  * State I/O is O(batch) per micro-batch for WRITES (the reference writes
  * only dirty records back, classes/RecordManager.php:1988-1994): the four
@@ -102,10 +105,11 @@ object StreamingDedup {
     * happened, or a crash between two appends would make the re-run see
     * its dirty docs as already-signed and silently skip their pairs —
     * and optionally restricted to a set of `_ub` partitions (parquet
-    * directory pruning; `Some(Nil)` reads nothing). */
+    * directory pruning; `Some(Nil)` reads nothing). `buckets` is by-name:
+    * its collect runs only when the log exists. */
   private def rawRead(spark: SparkSession, stateDir: String, table: String,
                       before: Option[Long],
-                      buckets: Option[Seq[Int]] = None): Option[DataFrame] =
+                      buckets: => Option[Seq[Int]] = None): Option[DataFrame] =
     DeltaLog.read(spark, stateDir, table)
       .map(df => before.fold(df)(b => df.where(col("_batch") < b)))
       .map(df => buckets.fold(df)(bs => df.where(col("_ub").isin(bs: _*))))
@@ -114,20 +118,12 @@ object StreamingDedup {
     df.drop("_batch", "_ub")
 
   /** Resolved pages snapshot (None before the first batch). */
-  def resolvedPages(spark: SparkSession, stateDir: String,
-                    before: Option[Long] = None): Option[DataFrame] =
-    rawRead(spark, stateDir, "pages", before)
-      .map(d => dropMeta(latestPerUrl(d)))
-
-  /** Resolved signature view WITH the `_batch` stamp (callers needing the
-    * lean schema drop it). */
-  private def resolvedSigsStamped(spark: SparkSession, stateDir: String,
-                                  before: Option[Long]): Option[DataFrame] =
-    rawRead(spark, stateDir, "signatures", before).map(d => latestPerUrl(d).drop("_ub"))
+  def resolvedPages(spark: SparkSession, stateDir: String): Option[DataFrame] =
+    rawRead(spark, stateDir, "pages", None).map(d => dropMeta(latestPerUrl(d)))
 
   def resolvedSignatures(spark: SparkSession, stateDir: String,
                          before: Option[Long] = None): Option[DataFrame] =
-    resolvedSigsStamped(spark, stateDir, before).map(_.drop("_batch"))
+    rawRead(spark, stateDir, "signatures", before).map(d => dropMeta(latestPerUrl(d)))
 
   /** Narrow per-doc latest signature batch — the liveness clock. groupBy
     * max over the two fixed-width columns (column-pruned scan, map-side
@@ -221,7 +217,8 @@ object StreamingDedup {
     * of the state BEFORE batch `bid` — the redelivery guard, see rawRead —
     * except page reads; `signaturesOf` and `pagesOf` prune to the url
     * buckets their keys fall in. A log that does not exist yet reads as
-    * empty: a crash between the pages append and the later appends of an
+    * empty: on the first batch of a state dir only the pages log exists,
+    * and a crash between the pages append and the later appends of an
     * earlier batch leaves a pages log without the others. */
   private final class LogReader(b: DataFrame, stateDir: String, cfg: DedupConfig,
                                 bid: Long, nB: Int) extends IncrementalDedup.PrevReader {
@@ -244,12 +241,6 @@ object StreamingDedup {
         val urls = raw.join(hashes, Seq("content_hash"), "left_semi").select("url").distinct()
         dropMeta(latestPerUrl(raw.join(urls, Seq("url"), "left_semi")))
       }.getOrElse(noSigs)
-
-    // the whole live probe view (the log is flat: a few docs' probe keys
-    // hit nearly every hash bucket); the core's semi-join on the keys
-    // restricts it
-    def probesIn(keys: DataFrame): DataFrame =
-      resolvedProbes(spark, stateDir, before).getOrElse(noProbes)
 
     // url bucket = pmod(doc_id, nB), derivable from the id without a url
     // join. before = None: this batch's pages delta is already appended,
@@ -284,27 +275,15 @@ object StreamingDedup {
       .select(pageCols.map(col): _*)
 
     val bid = if (batchId >= 0) batchId else DeltaLog.nextBatchId(stateDir, "pages")
-    // data-level cold-start test (manifest batch ids are rewritten by
-    // compaction; row stamps are not)
-    val before = Some(bid)
-    val havePrev = rawRead(spark, stateDir, "pages", before).exists(!_.isEmpty)
 
     // pages delta first (url-bucketed): the resolved log then already
     // carries this batch's text for participant/member reads
     DeltaLog.append(b.withColumn("_ub", urlBucket(nB)), stateDir, "pages", bid,
       partitionCols = Seq("_ub"))
 
-    val (d, pins) =
-      if (!havePrev) {
-        // cold start: the whole batch is the delta
-        val r = DedupPipeline.run(spark, b, cfg)
-        (IncrementalDedup.DeltaResult(r, r.signatures, r.probes, r.verifiedPairs),
-          Seq(r.signatures, r.verifiedPairs, r.candidatePairs))
-      } else {
-        // the upsert model: a batch removes no url
-        IncrementalDedup.pass(b, b.select("url").limit(0),
-          new LogReader(b, stateDir, cfg, bid, nB), cfg)
-      }
+    // the upsert model: a batch removes no url
+    val (d, pins) = IncrementalDedup.pass(b, b.select("url").limit(0),
+      new LogReader(b, stateDir, cfg, bid, nB), cfg)
     // O(dirty) state writes: ONLY this pass's increments are appended
     DeltaLog.append(d.deltaSignatures.withColumn("_ub", urlBucket(nB)),
       stateDir, "signatures", bid, partitionCols = Seq("_ub"))

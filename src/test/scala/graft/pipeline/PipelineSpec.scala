@@ -256,6 +256,9 @@ class PipelineSpec extends AnyFunSuite {
     // members is the largest n whose clique still fits
     assert(DedupConfig(bucketCap = 65535).bucketCap == 65535)
     intercept[IllegalArgumentException](DedupConfig(bucketCap = 65536))
+    // four 16-bit SimHash probe chunks are pigeonhole-complete only up to
+    // Hamming 3; a larger bound would silently miss pairs
+    intercept[IllegalArgumentException](DedupConfig(simhashMaxHamming = 4))
   }
 
   test("doc_ids are recompute-stable: same url -> same id under any partition layout") {
