@@ -130,10 +130,7 @@ object Bench {
         "merged" -> lap(r.merged.count()))
       else Seq("merged" -> lap(r.merged.count()))
     val secs = (System.nanoTime() - t0) / 1e9
-    if (!keep) {
-      r.signatures.unpersist(); r.verifiedPairs.unpersist()
-      r.candidatePairs.unpersist()
-    }
+    if (!keep) r.unpersist()
     (secs, r, stages)
   }
 
@@ -217,10 +214,7 @@ object Bench {
       i += 1
       val (secs, r, _) = runPipeline(s, pages, keep = withRecall, stageLaps = false)
       if (withRecall) {
-        if (lastResult != null) {
-          lastResult.signatures.unpersist(); lastResult.verifiedPairs.unpersist()
-          lastResult.candidatePairs.unpersist()
-        }
+        if (lastResult != null) lastResult.unpersist()
         lastResult = r
       }
       println(f"GRAFT_SCALE_RUN_WALL=$secs%.3f")
@@ -853,8 +847,7 @@ object Bench {
                   keep = true, stageLaps = false)
                 proto.addHi(t, Seq(t), forceWarm = rep > 1)
                 proto.recall = plantedRecall(s.read.parquet(corpusDir), r.verifiedPairs)
-                r.signatures.unpersist(); r.verifiedPairs.unpersist()
-                r.candidatePairs.unpersist()
+                r.unpersist()
                 emitScaling()
               }
               s.stop()

@@ -113,7 +113,7 @@ object Profile {
               java.nio.file.Paths.get(planDir, s"$nm.txt"),
               df.queryExecution.executedPlan.toString)
         }
-        r.signatures.unpersist(); r.verifiedPairs.unpersist(); r.candidatePairs.unpersist()
+        r.unpersist()
         import scala.jdk.CollectionConverters._
         val done = jobs.asScala.values.filter(_._2 > 0).toSeq.sortBy(_._1)
         val jobSum = done.map { case (s, e, _) => (e - s) / 1e3 }.sum
@@ -163,7 +163,7 @@ object Profile {
     t("full_pipeline_again") {
       val r = DedupPipeline.run(spark, SyntheticPages.generate(spark, n), cfg)
       val x = r.verifiedPairs.count() + r.clusters.count() + r.merged.count()
-      r.signatures.unpersist(); r.verifiedPairs.unpersist(); x
+      r.unpersist(); x
     }
     spark.stop()
   }

@@ -7,9 +7,12 @@ import org.apache.spark.sql.functions._
 /**
  * Similarity search over an embedding column (`Array[Float]`):
  * brute-force cosine top-k as the exact baseline, and a multi-band
- * sign-random-projection (SRP) LSH variant as the scale path (bucket
- * joins instead of a full cross product — the same OR-of-bands blocking
- * construction the text MinHash-LSH channel uses, SURVEY.md §7.0).
+ * sign-random-projection (SRP) LSH variant as the scale path (blocking
+ * instead of a full cross product — the same OR-of-bands construction the
+ * text MinHash-LSH channel uses, SURVEY.md §7.0). The SRP-band and
+ * IVF-cell blockers emit the text pipeline's narrow probe rows and run
+ * through its candidate stage, `DedupStages.candidatesFromProbes`: the
+ * same bucket cap and over-cap star salvage, one copy of the code.
  *
  * Band math: a pair at angle θ collides in one b-bit band with
  * p = (1-θ/π)^b; OR-ing L independent bands gives 1-(1-p)^L. At the
@@ -92,14 +95,7 @@ object Similarity {
       .select(col("vec_id"), col("v"), posexplode(keys).as(Seq("band_id", "band_key")))
   }
 
-  /** Back-compat single-bucket SRP code (nBits-bit int) per vector —
-    * kept as the cheap partitioner primitive; candidate generation goes
-    * through `srpBands` (multi-band OR) instead. */
-  def srpBucket(emb: DataFrame, nBits: Int = 8, seed: Long = 42L): DataFrame =
-    srpBands(emb, bands = 1, bitsPerBand = nBits, seed = seed)
-      .select(col("vec_id"), col("v"), col("band_key").as("bucket"))
-
-  /** Embedding near-duplicate pairs: multi-band SRP bucket join as the
+  /** Embedding near-duplicate pairs: multi-band SRP blocking as the
     * candidate generator (OR of `bands` independent `bitsPerBand`-bit
     * codes — see class doc for the recall math), exact cosine >= threshold
     * as the verifier. Canonical (id_a < id_b). Buckets above `bucketCap`
@@ -126,57 +122,34 @@ object Similarity {
       .select(col("id_a"), col("id_b"))
   }
 
-  /** Candidate (id_a < id_b) pairs from the multi-band SRP blocking — the
-    * NARROW stage: only (vec_id, band_id, band_key) rows enter the
-    * count-prefilter and the band self-join, so the shuffled bytes per
-    * vector are 3 × 8 B × bands regardless of dimensionality (the round-2
-    * formulation replicated full vectors ×bands on BOTH join sides —
-    * ~2 × bands × dim × 8 B of shuffle amplification, the dominant cost at
-    * embedding scale). The coded table is pinned (lazy localCheckpoint) so
-    * the expensive SRP projection — bands × bitsPerBand dot products per
-    * row — runs once, not once per consumer. */
+  /** Candidate (id_a < id_b) pairs from the multi-band SRP blocking: one
+    * narrow probe row per (vector, band), channel = band_id and bucket key
+    * = the band's code, through the pipeline's candidate stage
+    * (`candidatePairs`). The vectors never enter the blocking, so its
+    * shuffled bytes per vector do not grow with dimensionality, and the
+    * pinned probe rows run the SRP projection (bands × bitsPerBand dot
+    * products per row) once. */
   private[graft] def srpCandidates(emb: DataFrame, bands: Int, bitsPerBand: Int,
-                                   seed: Long, bucketCap: Int): DataFrame = {
-    val coded = srpBands(emb, bands, bitsPerBand, seed)
-      .select("vec_id", "band_id", "band_key").localCheckpoint(false)
-    bucketedPairs(coded, bucketCap)
-  }
+                                   seed: Long, bucketCap: Int): DataFrame =
+    candidatePairs(srpBands(emb, bands, bitsPerBand, seed).select(
+      col("band_id").cast("string").as("channel"), col("band_key").as("bucket_key"),
+      col("vec_id").cast("long").as("doc_id"), lit(0L).as("tag")), bucketCap)
 
-  /** Canonical (id_a < id_b) pairs of ids sharing a (band_id, band_key)
-    * bucket — the count-prefilter + over-cap star salvage shared by every
-    * bucketed candidate generator (SRP bands above, IVF cells in
-    * `semDedupPairs`). `coded` must be pinned/cached by the caller: it is
-    * consumed by the count agg and both join sides. */
-  private def bucketedPairs(coded: DataFrame, bucketCap: Int): DataFrame = {
-    // counts is consumed by FOUR join sides (small a/b, big rep/others);
-    // planner exchange reuse is not guaranteed to deduplicate the agg per
-    // consumer (measured on the verify side relation: zero ReusedExchange
-    // across identical subtrees), so the narrow multi-member-bucket rows
-    // are pinned once — the same pattern candidatesFromProbes uses
-    val counts = coded.groupBy("band_id", "band_key")
-      .agg(count(lit(1)).as("n"), min("vec_id").as("min_id"))
-      .where(col("n") >= 2)
-      .localCheckpoint(false)
-    val kept = coded.join(counts, Seq("band_id", "band_key"))
-    def side(pred: Column, idAs: String) =
-      kept.where(pred).select(col("band_id").as(s"bi_$idAs"),
-        col("band_key").as(s"bk_$idAs"), col("vec_id").as(idAs))
-    // normal buckets: all unordered pairs
-    val smallA = side(col("n") <= bucketCap, "id_a")
-    val smallB = side(col("n") <= bucketCap, "id_b")
-    val smallPairs = smallA.join(smallB,
-      col("bi_id_a") === col("bi_id_b") && col("bk_id_a") === col("bk_id_b") &&
-        col("id_a") < col("id_b"))
-    // over-cap buckets: star from the min-id member ONLY — the join never
-    // generates the O(m²) intermediate, just m rows per degenerate bucket
-    // (and id_a = bucket min < id_b keeps the output canonical)
-    val bigRep = side(col("n") > bucketCap && col("vec_id") === col("min_id"), "id_a")
-    val bigOthers = side(col("n") > bucketCap && col("vec_id") =!= col("min_id"), "id_b")
-    val bigPairs = bigRep.join(bigOthers,
-      col("bi_id_a") === col("bi_id_b") && col("bk_id_a") === col("bk_id_b"))
-    smallPairs.unionByName(bigPairs)
-      .select(col("id_a"), col("id_b"))
-      .distinct()
+  /** Canonical (id_a < id_b) pairs of ids sharing a bucket of the narrow
+    * probe rows `(channel, bucket_key, doc_id, tag)` — SRP bands above,
+    * IVF cells in `semDedupPairs` — from the text pipeline's candidate
+    * stage, `DedupStages.candidatesFromProbes`: one counting pass, clique
+    * expansion for buckets of at most `bucketCap` members and a star from
+    * the min id for larger ones. `doc_id` must be a long (the clique
+    * expansion reads it as one). The probe rows are pinned (lazy
+    * localCheckpoint) because that stage reads them twice. */
+  private def candidatePairs(probes: DataFrame, bucketCap: Int): DataFrame = {
+    val coded = probes.where(col("doc_id").isNotNull).localCheckpoint(false)
+    graft.pipeline.DedupStages.candidatesFromProbes(coded, coded,
+        graft.pipeline.DedupConfig(bucketCap = bucketCap, exactChannel = false))._1
+      // a vec_id listed twice would pair with itself
+      .where(col("id_a") < col("id_b"))
+      .select("id_a", "id_b")
   }
 
   /** Embedding duplicate GROUPS: connected components over the (possibly
@@ -366,14 +339,16 @@ object Similarity {
     * loses every pair the quantizer splits across a cell boundary;
     * probing 2 cells retires most of that boundary loss for ≤2× the
     * candidate volume (the residual is measured by the recall harness
-    * row, `q_semdedup_recall`). Over-cap cells fall back to the same
-    * star salvage as the SRP bands (group recovery stays complete
-    * through the connected-components step in `semDedup`).
+    * row, `q_semdedup_recall`). The cells are blocked by the pipeline's
+    * candidate stage (`DedupStages.candidatesFromProbes`, channel "ivf",
+    * bucket key = cell): over-cap cells fall back to its star salvage,
+    * as the SRP bands do (group recovery stays complete through the
+    * connected-components step in `semDedup`).
     *
     * Scale shape: the quantizer is a broadcast literal (zero-shuffle cell
-    * assignment); only narrow (vec_id, cell) rows enter the count
-    * prefilter and the cell self-join; vectors join back once per side
-    * onto deduplicated candidate ids. Cells are the partition unit at
+    * assignment); only narrow (vec_id, cell) probe rows enter the
+    * candidate stage; vectors join back once per side onto deduplicated
+    * candidate ids. Cells are the partition unit at
     * 10^12 rows — grow `nCentroids` with the corpus so cell volume stays
     * bounded (the paper runs 50k clusters), and the within-cell join
     * never approaches all-pairs. */
@@ -392,13 +367,13 @@ object Similarity {
       struct((-cosine(col("v"), element_at(cvs, i + 1))).as("d"),
         i.cast("long").as("cent_id"))))
     val p = math.min(probeCells, cent.size)
-    val coded = base.select(col("vec_id"), lit(0).as("band_id"),
-        explode(transform(slice(scoredCells, 1, p), s => s.getField("cent_id")))
-          .as("band_key"))
-      .localCheckpoint(false)
+    val cells = base.select(lit("ivf").as("channel"),
+      explode(transform(slice(scoredCells, 1, p), s => s.getField("cent_id")))
+        .as("bucket_key"),
+      col("vec_id").cast("long").as("doc_id"), lit(0L).as("tag"))
     // exact-cosine verify: vectors join back once per side onto the
     // deduplicated narrow candidate ids (same shape as cosineDupPairs)
-    bucketedPairs(coded, bucketCap)
+    candidatePairs(cells, bucketCap)
       .join(base.select(col("vec_id").as("id_a"), col("v").as("va")), "id_a")
       .join(base.select(col("vec_id").as("id_b"), col("v").as("vb")), "id_b")
       .where(cosine(col("va"), col("vb")) >= threshold)

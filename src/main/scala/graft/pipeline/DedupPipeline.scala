@@ -643,6 +643,9 @@ object DedupStages {
 /** End-to-end orchestration with optional per-stage checkpoint/resume. */
 object DedupPipeline {
 
+  /** A pipeline run's frames. `pins` are the caches behind them: the
+    * caller that consumed the result releases them with `unpersist()`
+    * (the frames stay valid and recompute if read again). */
   final case class Result(
       signatures: DataFrame,
       /** fixed-width probe index (channel, bucket_key, doc_id, tag) — the
@@ -653,7 +656,10 @@ object DedupPipeline {
       droppedBuckets: DataFrame,
       verifiedPairs: DataFrame,
       clusters: DataFrame,
-      merged: DataFrame)
+      merged: DataFrame,
+      pins: Seq[DataFrame] = Nil) {
+    def unpersist(): Unit = pins.foreach(_.unpersist())
+  }
 
   /** Fingerprint of the input snapshot for checkpoint-reuse decisions:
     * row count + hash-sum of (url, content identity). Cheap single scan. */
@@ -729,6 +735,8 @@ object DedupPipeline {
       .join(pw.select(pwTextCols.map(col): _*), "doc_id")
     val ver0 = timed("verified_pairs")(DedupStages.verified(candC, verSide, cfg))
     val ver = if (checkpointRoot.isEmpty) ver0.cache() else ver0
+    // the caches above (stages read back from a checkpoint need no release)
+    val pins = if (checkpointRoot.isEmpty) Seq(pw, sigs, candC, ver) else Nil
     val clu = timed("clusters")(DedupStages.clusters(ver))
     val merged = timed("merged_clusters")(DedupStages.mergedClusters(clu, pw))
 
@@ -739,6 +747,6 @@ object DedupPipeline {
         graft.io.Metrics.stageMetrics(spark, root, timings.toSeq, s"$ch-$fp"),
         root, "stage_metrics", ch, fp)
     }
-    Result(sigs, probes, candC, droppedC, ver, clu, merged)
+    Result(sigs, probes, candC, droppedC, ver, clu, merged, pins)
   }
 }

@@ -99,15 +99,16 @@ object IncrementalDedup {
     val pages = DedupStages.withSource(newPages)
     val removed = prev.signatures.select("url")
       .join(pages.select("url"), Seq("url"), "left_anti")
-    pass(pages, removed, new InMemory(prev, pages), cfg)._1
+    pass(pages, removed, new InMemory(prev, pages), cfg)
   }
 
   /** The incremental core: fold `upserts` (page rows, url = key) and the
-    * `removed` urls into the state `prev` reads. Returns the result and
-    * its cache pins, which a caller releases once it has consumed the
-    * result. */
+    * `removed` urls into the state `prev` reads. The pass's five cache
+    * pins ride in `full.pins`: the caller releases them with
+    * `full.unpersist()` once it has consumed the result (and the deltas,
+    * which read the same pins). */
   def pass(upserts: DataFrame, removed: DataFrame, prev: PrevReader,
-           cfg: DedupConfig): (DeltaResult, Seq[DataFrame]) = {
+           cfg: DedupConfig): DeltaResult = {
     // dirty = upserted rows that are new or content-changed vs the latest
     // previous signature of their url
     val prevKeys = prev.signaturesOf(upserts.select("url"))
@@ -185,11 +186,10 @@ object IncrementalDedup {
       .unionByName(deltaSigs)
     val probesAll = prev.probes.join(goneIds, Seq("doc_id"), "left_anti")
       .unionByName(deltaProbes)
-    (DeltaResult(
+    DeltaResult(
       DedupPipeline.Result(sigsAll, probesAll, deltaPairs, dropped, verifiedAll,
-        clusters, merged),
+        clusters, merged, Seq(deltaSigs, deltaProbes, deltaPairs, verifiedAll, clusters)),
       deltaSignatures = deltaSigs, deltaProbes = deltaProbes,
-      deltaVerified = deltaVerified),
-      Seq(deltaSigs, deltaProbes, deltaPairs, verifiedAll, clusters))
+      deltaVerified = deltaVerified)
   }
 }

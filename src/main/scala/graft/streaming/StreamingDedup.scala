@@ -282,7 +282,7 @@ object StreamingDedup {
       partitionCols = Seq("_ub"))
 
     // the upsert model: a batch removes no url
-    val (d, pins) = IncrementalDedup.pass(b, b.select("url").limit(0),
+    val d = IncrementalDedup.pass(b, b.select("url").limit(0),
       new LogReader(b, stateDir, cfg, bid, nB), cfg)
     // O(dirty) state writes: ONLY this pass's increments are appended
     DeltaLog.append(d.deltaSignatures.withColumn("_ub", urlBucket(nB)),
@@ -332,7 +332,7 @@ object StreamingDedup {
     // lazily if a caller consumes them). Without this a long-running
     // stream accumulates cached plans/blocks in the CacheManager without
     // bound.
-    pins.foreach(_.unpersist())
+    result.unpersist()
 
     DedupPipeline.Result(
       resolvedSignatures(spark, stateDir).get,

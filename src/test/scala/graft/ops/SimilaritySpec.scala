@@ -47,8 +47,8 @@ class SimilaritySpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     // keys must be non-degenerate: the 28 random vectors shouldn't all
     // share one bucket (the dim>512 bug collapsed every key to 0)
-    val distinctKeys = Similarity.srpBucket(df, nBits = 8)
-      .select("bucket").distinct().count()
+    val distinctKeys = Similarity.srpBands(df, bands = 1, bitsPerBand = 8, seed = 42L)
+      .select("band_key").distinct().count()
     assert(distinctKeys > 5, s"degenerate SRP keys: $distinctKeys distinct")
     val got = Similarity.cosineDupPairs(df, threshold = 0.95)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -66,6 +66,14 @@ class SimilaritySpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((0L until 30L).forall(comp.contains), "every copy must be grouped")
     assert((0L until 30L).map(comp).toSet.size == 1, "…into ONE component")
+    // the same star salvage reached through IVF cells: the 30 copies share
+    // their probe cells, each over the cap
+    val sem = Similarity.semDedup(df, bucketCap = 5)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert((0L until 30L).map(i => sem(i)._1).toSet.size == 1,
+      "semDedup must put every copy in one cluster")
+    assert((0L until 30L).count(i => sem(i)._2 == 1L) == 1,
+      "semDedup must keep exactly one copy")
   }
 
   test("knnIvf: exact copy lands in the anchor's cell and ranks 1") {

@@ -43,11 +43,16 @@ class IncrementalSpec extends AnyFunSuite {
     val v2 = changed ++ adds
 
     val cfg = DedupConfig()
-    val full1 = DedupPipeline.run(spark, toDf(v1).cache(), cfg)
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    // no input caches here: every cache below is one a run makes itself
+    // (the PrevState .cache() calls alias full1's pins)
+    val full1 = DedupPipeline.run(spark, toDf(v1), cfg)
     val prev = IncrementalDedup.PrevState(
-      full1.signatures.cache(), full1.probes.cache(), full1.verifiedPairs.cache())
+      full1.signatures.cache(), full1.probes, full1.verifiedPairs.cache())
 
-    val incr = IncrementalDedup.run(spark, prev, toDf(v2).cache(), cfg)
+    val incr = IncrementalDedup.run(spark, prev, toDf(v2), cfg)
     val cold = DedupPipeline.run(spark, toDf(v2), cfg)
 
     assert(clustersOf(incr) == clustersOf(cold))
@@ -61,6 +66,8 @@ class IncrementalSpec extends AnyFunSuite {
       prev.signatures.select("url", "content_hash"),
       Seq("url", "content_hash"), "left_anti").count()
     assert(recomputed < v2.size / 2, s"only dirty docs re-signed (got $recomputed of ${v2.size})")
+    Seq(full1, incr, cold).foreach(_.unpersist())
+    assert(cacheManager.isEmpty, "a run left cached plans behind")
   }
 
   test("O(dirty): probe work scales with the dirty set and unchanged docs join candidates ONLY via the stored probe index") {

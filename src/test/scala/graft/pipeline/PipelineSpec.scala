@@ -34,7 +34,12 @@ class PipelineSpec extends AnyFunSuite {
     // cluster-implied pairs are the comparable set — SURVEY.md §7.4)
     val oracle = NaiveDedup.clusterPairs(NaiveDedup.clusters(
       NaiveDedup.duplicatePairs(corpus.pages, NaiveDedup.Params())))
-    val r = DedupPipeline.run(spark, pagesDf, DedupConfig())
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // force the suite's lazily cached input, so the clearCache releases it
+    val pages = pagesDf
+    spark.catalog.clearCache()
+    val r = DedupPipeline.run(spark, pages, DedupConfig())
     val got = NaiveDedup.clusterPairs(
       r.clusters.collect().map(x => x.getString(0) -> x.getString(1)).toMap)
     assert(oracle.nonEmpty, "oracle must find planted duplicates")
@@ -42,6 +47,9 @@ class PipelineSpec extends AnyFunSuite {
     val precision = if (got.isEmpty) 1.0 else (oracle & got).size.toDouble / got.size
     assert(recall >= 0.99, s"recall $recall (missing ${(oracle -- got).take(5)})")
     assert(precision == 1.0, s"precision $precision (extra ${(got -- oracle).take(5)})")
+    // every cache the run made is in its pins, the cached pages included
+    r.unpersist()
+    assert(cacheManager.isEmpty, "the run left cached plans behind")
   }
 
   test("cluster assignments match oracle transitive closure") {

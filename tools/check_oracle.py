@@ -55,6 +55,11 @@ def main():
                 mask = (s.astype(str) != o.astype(str)).any(axis=1)
                 print(f"--- {name} first diffs:")
                 print(pd.concat([s[mask].head(3), o[mask].head(3)]))
+    # Verify logs a query that throws and writes no directory for it: an
+    # oracle-checked query without output has failed, not passed
+    for name in oracles:
+        if not os.path.isdir(os.path.join(out_dir, name)):
+            results[name] = "MISSING (no output directory)"
     bad = 0
     for k in sorted(results):
         flag = "  " if results[k].startswith(("OK", "rows-only")) else "!!"
